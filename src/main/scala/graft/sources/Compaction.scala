@@ -703,11 +703,13 @@ object Compaction {
   def resolve(fs: org.apache.hadoop.fs.FileSystem, main: Path): Path =
     currentGen(fs, main).map(new Path(main, _)).getOrElse(main)
 
-  /** Read the table at `path`, generational or flat. */
+  /** Read the table at `path`, generational or flat, with the schema
+    * taken from one footer on the driver ([[graft.util.FooterSchema]]).
+    */
   def readTable(spark: SparkSession, path: String): org.apache.spark.sql.DataFrame = {
     val main = new Path(path)
     val fs = main.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    spark.read.parquet(resolve(fs, main).toString)
+    graft.util.FooterSchema.read(spark, resolve(fs, main).toString)
   }
 
   /** Published generations whose data dirs are still present — the
@@ -787,7 +789,7 @@ object Compaction {
       s"generation $gen at $path is not readable — never published, " +
         "in flight, or outside the retention window (readable: " +
         s"${generations(spark, path).mkString(",")})")
-    spark.read.parquet(new Path(main, genName(gen)).toString)
+    graft.util.FooterSchema.read(spark, new Path(main, genName(gen)).toString)
   }
 
   /** The change feed BETWEEN two published generations — the inverse

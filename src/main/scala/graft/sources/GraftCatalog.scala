@@ -71,13 +71,15 @@ class GraftCatalog extends TableCatalog {
       else {
         val dir = GraftDataSource.resolveGenDir(spark, path, pin)
         new GraftWritableTable(s"$catalogName $path", spark,
-          CaseInsensitiveStringMap.empty(), Seq(dir), None,
+          CaseInsensitiveStringMap.empty(), Seq(dir),
+          graft.util.FooterSchema.of(spark, Seq(dir)),
           classOf[ParquetFileFormat], path)
       }
     } else {
       val dir = GraftDataSource.resolveGenDir(spark, path, pin)
       new GraftReadOnlyTable(s"$catalogName $path", spark,
-        CaseInsensitiveStringMap.empty(), Seq(dir), None,
+        CaseInsensitiveStringMap.empty(), Seq(dir),
+        graft.util.FooterSchema.of(spark, Seq(dir)),
         classOf[ParquetFileFormat])
     }
   }

@@ -1,5 +1,7 @@
 package graft.sources
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession, SQLContext}
 import org.apache.spark.sql.connector.catalog.{Table, TableProvider}
@@ -11,6 +13,8 @@ import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider, DataSourceRegister, RelationProvider}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+
+import graft.util.FooterSchema
 
 /** `spark.read.format("graft")` — the DSv2 face of the generational
   * table layout (r15 verdict #1): until now generations, time travel,
@@ -106,12 +110,13 @@ class GraftDataSource extends TableProvider with DataSourceRegister
     * provider instance: inferSchema / inferPartitioning / getTable are
     * three separate calls on Spark's side, and re-resolving in each
     * would let a writeGen landing between them pair generation N's
-    * inferred schema with a scan of N+1. Spark instantiates a fresh
-    * provider per read, so the memo's lifetime is exactly one load.
+    * inferred schema with a scan of N+1. The footer schema of the
+    * resolved dirs is memoized with them for the same reason, so the
+    * schema inferSchema reports is the one getTable scans with. Spark
+    * instantiates a fresh provider per read, so the memo's lifetime is
+    * exactly one load.
     */
-  @volatile private var resolutionMemo
-      : Option[((Seq[String], (Option[Long], Option[Long])), Seq[String])] =
-    None
+  @volatile private var resolutionMemo: Option[Resolution] = None
 
   private def graftTable(options: CaseInsensitiveStringMap,
                          schema: Option[StructType]): Table = {
@@ -121,24 +126,26 @@ class GraftDataSource extends TableProvider with DataSourceRegister
       "graft: no path given — load(<table root>) or option(\"path\", ...)")
     val pin = genOptions(Option(options.get(GenerationOption)),
       Option(options.get(AsOfGenOption)))
+    val readerOptions = withoutResolutionKeys(options)
     val key = (paths, pin)
-    val resolved = resolutionMemo match {
-      case Some((k, dirs)) if k == key => dirs
+    val res = resolutionMemo match {
+      case Some(r) if r.key == key => r
       case _ =>
-        val dirs = paths.map(p => resolveGenDir(spark, p, pin))
-        resolutionMemo = Some((key, dirs))
-        dirs
+        val r = new Resolution(key, paths.map(p => resolveGenDir(spark, p, pin)),
+          readerOptions)
+        resolutionMemo = Some(r)
+        r
     }
     val writable = pin == ((None, None)) && paths.lengthCompare(1) == 0
     if (writable && schema.isEmpty && isEmptyRoot(spark, paths.head))
       new GraftBootstrapTable(s"graft ${paths.head}", paths.head)
     else if (writable)
       new GraftWritableTable(s"graft ${paths.mkString(",")}", spark,
-        withoutResolutionKeys(options), resolved, schema,
+        readerOptions, res.dirs, schema.orElse(res.footerSchema),
         classOf[ParquetFileFormat], paths.head)
     else
       new GraftReadOnlyTable(s"graft ${paths.mkString(",")}", spark,
-        withoutResolutionKeys(options), resolved, schema,
+        readerOptions, res.dirs, schema.orElse(res.footerSchema),
         classOf[ParquetFileFormat])
   }
 
@@ -161,8 +168,9 @@ class GraftDataSource extends TableProvider with DataSourceRegister
       val lk = k.toLowerCase(java.util.Locale.ROOT)
       ResolutionKeys(lk)
     }
-    DataSource(spark, className = "parquet",
-      paths = Seq(resolveGenDir(spark, path, pin)),
+    val dir = resolveGenDir(spark, path, pin)
+    DataSource(spark, className = "parquet", paths = Seq(dir),
+      userSpecifiedSchema = FooterSchema.of(spark, Seq(dir), passThrough),
       options = passThrough).resolveRelation()
   }
 
@@ -265,6 +273,17 @@ class GraftDataSource extends TableProvider with DataSourceRegister
     }
     createRelation(sqlContext, parameters)
   }
+}
+
+/** One load's resolved generation dirs; the footer schema is read at
+  * most once, and only when no schema was given.
+  */
+private[sources] final class Resolution(
+    val key: (Seq[String], (Option[Long], Option[Long])),
+    val dirs: Seq[String], readerOptions: CaseInsensitiveStringMap) {
+  lazy val footerSchema: Option[StructType] =
+    FooterSchema.of(SparkSession.active, dirs,
+      readerOptions.asCaseSensitiveMap().asScala.toMap)
 }
 
 object GraftDataSource {

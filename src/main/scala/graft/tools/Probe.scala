@@ -3,7 +3,12 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Dev-only: settle parquet timestamp semantics (NTZ?), ns truncation. */
+import graft.util.{FooterSchema, Tables}
+
+/** Dev-only: show how the engine reads the testdata timestamps — the
+  * parquet footer's `ts` type, the schemas `Tables` hands to queries,
+  * and a few µs-truncated events rows.
+  */
 object Probe {
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder().master("local[4]")
@@ -13,13 +18,13 @@ object Probe {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = "/root/testdata/sf0.001"
-    val orders = spark.read.parquet(s"$dir/orders.parquet")
+    println("EVENTS FOOTER ts: " +
+      FooterSchema.parquetSchema(spark, s"$dir/events.parquet").getType(Seq("ts"): _*))
+    val orders = Tables(spark, dir, "orders")
     println("ORDERS SCHEMA: " + orders.schema.simpleString)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val events = spark.read.parquet(s"$dir/events.parquet")
+    val events = Tables(spark, dir, "events")
     println("EVENTS SCHEMA: " + events.schema.simpleString)
-    events.select(col("ts"),
-        timestamp_micros(expr("ts div 1000")).cast("string").as("us"))
+    events.select(col("event_id"), col("ts").cast("string").as("ts"))
       .orderBy("event_id").limit(3).collect().foreach(println)
     println(orders.select(min("o_orderdate").cast("string")).collect().toSeq)
     spark.stop()

@@ -15,7 +15,7 @@ object ProfileDedup {
       .config(graft.util.Tuning.sqlDefaults.toMap)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = graft.util.Tables(spark, sfDir, "documents")
     def t[A](label: String)(f: => A): Unit = {
       val t0 = System.nanoTime()
       val r = f

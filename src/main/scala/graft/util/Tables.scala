@@ -1,5 +1,6 @@
 package graft.util
 
+import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -14,31 +15,66 @@ import org.apache.spark.sql.types._
   * mirrors the same casts.
   */
 object Tables {
-  val all: Seq[String] = Seq("region", "nation", "customer", "supplier",
-    "part", "orders", "lineitem", "events", "documents", "embeddings")
+  /** The testdata contract: every table's schema as the engine reads it,
+    * in column order. Reads declare it, so building a query starts no
+    * schema-inference job and opens no file (events alone reads its
+    * footer on the driver, see [[events]]). SchemaProbeSpec compares it
+    * with Spark's inference over every testdata scale, so a regenerated
+    * dataset that drifts fails there as one line per column — update
+    * this list (and FIXTURES.md §B) when that happens.
+    */
+  private val contract: Seq[(String, String)] = Seq(
+    "region" -> "r_regionkey INT, r_name STRING",
+    "nation" -> "n_nationkey INT, n_name STRING, n_regionkey INT",
+    "customer" -> ("c_custkey BIGINT, c_name STRING, c_nationkey INT, " +
+      "c_acctbal DOUBLE, c_mktsegment STRING"),
+    "supplier" -> ("s_suppkey BIGINT, s_name STRING, s_nationkey INT, " +
+      "s_acctbal DOUBLE"),
+    "part" -> ("p_partkey BIGINT, p_name STRING, p_brand STRING, " +
+      "p_type STRING, p_size INT, p_retailprice DOUBLE"),
+    "orders" -> ("o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, " +
+      "o_totalprice DOUBLE, o_orderdate TIMESTAMP_NTZ, o_orderpriority STRING"),
+    "lineitem" -> ("l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, " +
+      "l_linenumber INT, l_quantity DOUBLE, l_extendedprice DOUBLE, " +
+      "l_discount DOUBLE, l_tax DOUBLE, l_returnflag STRING, " +
+      "l_linestatus STRING, l_shipdate TIMESTAMP_NTZ"),
+    "events" -> ("event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, " +
+      "event_type STRING, value DOUBLE, props STRING"),
+    "documents" -> ("doc_id BIGINT, text STRING, lang STRING, source STRING, " +
+      "n_chars BIGINT"),
+    "embeddings" -> "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT")
+
+  val all: Seq[String] = contract.map(_._1)
+
+  val schemas: Map[String, StructType] =
+    contract.map { case (t, ddl) => t -> StructType.fromDDL(ddl) }.toMap
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") events(spark, dir)
-    else spark.read.parquet(s"$dir/$name.parquet")
+    else spark.read.schema(schemas(name)).parquet(s"$dir/$name.parquet")
 
   /** events.ts has shipped as both parquet TIMESTAMP(NANOS) and
     * TIMESTAMP(MICROS) across testdata generations, so branch on the
-    * scanned type instead of assuming either. NANOS: Spark's vectorized
-    * reader rejects it outright (PARQUET_TYPE_ILLEGAL), so read raw
-    * nanos (legacy long mode) and truncate to microseconds — the same
-    * floor DuckDB applies when casting TIMESTAMP_NS → TIMESTAMP.
-    * MICROS: plain scan, normalised to TimestampNTZ. Either way both
-    * engines stay in naive wall-clock land (no tz shifts on either side).
+    * file's footer (read on the driver) instead of assuming either.
+    * NANOS: Spark's vectorized reader rejects it outright
+    * (PARQUET_TYPE_ILLEGAL), so read raw nanos (legacy long mode) and
+    * truncate to microseconds — the same floor DuckDB applies when
+    * casting TIMESTAMP_NS → TIMESTAMP. Only this branch sets the
+    * session-wide long mode. MICROS: the declared schema. Either way
+    * both engines stay in naive wall-clock land (no tz shifts on either
+    * side).
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$dir/events.parquet")
-    df.schema("ts").dataType match {
-      case LongType =>
-        df.withColumn("ts",
+    val file = s"$dir/events.parquet"
+    FooterSchema.parquetSchema(spark, file).getType(Seq("ts"): _*)
+        .getLogicalTypeAnnotation match {
+      case t: TimestampLogicalTypeAnnotation if t.getUnit == TimeUnit.NANOS =>
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        val raw = StructType(schemas("events").map(f =>
+          if (f.name == "ts") f.copy(dataType = LongType) else f))
+        spark.read.schema(raw).parquet(file).withColumn("ts",
           timestamp_micros(expr("ts div 1000")).cast("timestamp_ntz"))
-      case TimestampNTZType => df
-      case _ => df.withColumn("ts", col("ts").cast("timestamp_ntz"))
+      case _ => spark.read.schema(schemas("events")).parquet(file)
     }
   }
 

@@ -3,6 +3,7 @@ package org.apache.spark.sql.graftshim
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.types.StructType
 
 /** Column ⇄ Expression bridge.
   *
@@ -16,4 +17,9 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** `StructType.asNullable` (`private[spark]`): the nullability every
+    * file-source read applies to its data schema.
+    */
+  def asNullable(s: StructType): StructType = s.asNullable
 }

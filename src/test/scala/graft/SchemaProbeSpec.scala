@@ -1,70 +1,79 @@
 package graft
 
+import java.io.File
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.util.Tables
 
-/** Testdata-drift tripwire (round-7 driver finding): when the driver
-  * regenerated events.parquet with TIMESTAMP(MICROS) instead of
+/** The testdata contract check. When the testdata was once
+  * regenerated with events.parquet in TIMESTAMP(MICROS) instead of
   * TIMESTAMP(NANOS), every events query died with the same opaque
   * AnalysisException — 31 red rows that took an artifact diff to trace
-  * to one reader. This spec pins the ENGINE-side schema of every table
-  * as seen through [[graft.util.Tables]] (the view all queries consume,
-  * after any reader normalization), so the next regeneration fails as
-  * ONE readable line naming the table, column, and type delta.
+  * to one reader. [[graft.util.Tables]] now DECLARES every table's
+  * schema instead of inferring it, so a drifted file would no longer
+  * fail at read time at all: a vanished column reads as nulls. This
+  * spec is what catches drift: it compares the declared contract with
+  * Spark's own inference over every testdata scale present, so the next
+  * regeneration fails as ONE readable line per table and column.
   *
-  * Physical-format changes that Tables absorbs (e.g. ns-long vs µs
-  * timestamps, both normalized to timestamp_ntz) intentionally do NOT
-  * fail — queries are unaffected by what the reader hides.
+  * events.ts may be TIMESTAMP(NANOS) or TIMESTAMP(MICROS) on disk —
+  * Tables absorbs that (both read as timestamp_ntz), so a NANOS footer
+  * is not drift.
   */
 class SchemaProbeSpec extends AnyFunSuite {
   import GraftSpark.{spark, sfDir}
 
-  private val expected: Map[String, Seq[(String, String)]] = Map(
-    "region" -> Seq("r_regionkey" -> "int", "r_name" -> "string"),
-    "nation" -> Seq("n_nationkey" -> "int", "n_name" -> "string",
-      "n_regionkey" -> "int"),
-    "customer" -> Seq("c_custkey" -> "bigint", "c_name" -> "string",
-      "c_nationkey" -> "int", "c_acctbal" -> "double",
-      "c_mktsegment" -> "string"),
-    "supplier" -> Seq("s_suppkey" -> "bigint", "s_name" -> "string",
-      "s_nationkey" -> "int", "s_acctbal" -> "double"),
-    "part" -> Seq("p_partkey" -> "bigint", "p_name" -> "string",
-      "p_brand" -> "string", "p_type" -> "string", "p_size" -> "int",
-      "p_retailprice" -> "double"),
-    "orders" -> Seq("o_orderkey" -> "bigint", "o_custkey" -> "bigint",
-      "o_orderstatus" -> "string", "o_totalprice" -> "double",
-      "o_orderdate" -> "timestamp_ntz", "o_orderpriority" -> "string"),
-    "lineitem" -> Seq("l_orderkey" -> "bigint", "l_partkey" -> "bigint",
-      "l_suppkey" -> "bigint", "l_linenumber" -> "int",
-      "l_quantity" -> "double", "l_extendedprice" -> "double",
-      "l_discount" -> "double", "l_tax" -> "double",
-      "l_returnflag" -> "string", "l_linestatus" -> "string",
-      "l_shipdate" -> "timestamp_ntz"),
-    "events" -> Seq("event_id" -> "bigint", "ts" -> "timestamp_ntz",
-      "user_id" -> "bigint", "event_type" -> "string",
-      "value" -> "double", "props" -> "string"),
-    "documents" -> Seq("doc_id" -> "bigint", "text" -> "string",
-      "lang" -> "string", "source" -> "string", "n_chars" -> "bigint"),
-    "embeddings" -> Seq("vec_id" -> "bigint",
-      "embedding" -> "array<float>", "label" -> "int"))
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
+  private val sfDirs: Seq[String] =
+    Option(new File(sfDir).getParentFile.listFiles()).toSeq.flatten
+      .filter(f => f.isDirectory && f.getName.startsWith("sf"))
+      .map(_.getPath).sorted
+
+  private def file(dir: String, t: String) = s"$dir/$t.parquet"
+
+  /** Run `f` with Spark inferring NANOS timestamps as longs, restoring
+    * the session's setting after.
+    */
+  private def withNanosAsLong[A](f: => A): A = {
+    val prior = spark.conf.getOption(NanosAsLong)
+    spark.conf.set(NanosAsLong, "true")
+    try f finally prior.fold(spark.conf.unset(NanosAsLong))(spark.conf.set(NanosAsLong, _))
+  }
+
+  /** The table as Spark's schema inference reads it, with a NANOS
+    * events.ts normalised the way Tables normalises it.
+    */
+  private def inferring(dir: String, t: String): DataFrame = {
+    val df = spark.read.parquet(file(dir, t))
+    if (t == "events" && df.schema("ts").dataType == LongType)
+      df.withColumn("ts", timestamp_micros(expr("ts div 1000")).cast("timestamp_ntz"))
+    else df
+  }
+
+  private def columns(s: StructType): Seq[(String, String)] =
+    s.fields.map(f => f.name -> f.dataType.simpleString).toSeq
 
   test("every testdata table reads with the engine-contract schema") {
-    val deltas = Tables.all.flatMap { t =>
+    assert(sfDirs.nonEmpty, s"no sf* dir beside $sfDir to check")
+    val deltas = for (dir <- sfDirs; t <- Tables.all; d <- {
       try {
-        val got = Tables(spark, sfDir, t).schema.fields
-          .map(f => f.name -> f.dataType.simpleString).toSeq
-        val want = expected(t)
+        val got = columns(withNanosAsLong(inferring(dir, t).schema))
+        val want = columns(Tables.schemas(t))
         if (got == want) Nil
         else {
           val missing = want.filterNot(got.contains)
-            .map { case (c, ty) => s"$t.$c: expected $ty, got " +
+            .map { case (c, ty) => s"$t.$c: declared $ty, file has " +
               got.collectFirst { case (`c`, a) => a }.getOrElse("ABSENT") }
           val extra = got.map(_._1).diff(want.map(_._1))
-            .map(c => s"$t.$c: unexpected new column")
+            .map(c => s"$t.$c: undeclared new column")
           val reordered =
             if (missing.isEmpty && extra.isEmpty)
-              Seq(s"$t: columns reordered — got ${got.map(_._1).mkString(",")}")
+              Seq(s"$t: columns reordered — file has ${got.map(_._1).mkString(",")}")
             else Nil
           missing ++ extra ++ reordered
         }
@@ -73,10 +82,31 @@ class SchemaProbeSpec extends AnyFunSuite {
           Seq(s"$t: READ FAILED — ${e.getClass.getSimpleName}: " +
             String.valueOf(e.getMessage).linesIterator.take(1).mkString)
       }
-    }
+    }) yield s"${new File(dir).getName} $d"
     assert(deltas.isEmpty,
       "\nTESTDATA DRIFT — regenerate broke the engine contract:\n  " +
         deltas.mkString("\n  ") +
-        "\n(update graft.util.Tables readers or this spec's expectations)")
+        "\n(update the contract in graft.util.Tables and FIXTURES.md §B)")
+  }
+
+  test("Tables reads every table with its declared schema") {
+    Tables.all.foreach { t =>
+      assert(columns(Tables(spark, sfDir, t).schema) == columns(Tables.schemas(t)), t)
+    }
+  }
+
+  test("a declared read returns the same rows as an inferring read (sf0.001)") {
+    def fingerprint(df: DataFrame): (Long, BigDecimal) = {
+      val r = df.agg(count(lit(1)),
+          sum(xxhash64(df.columns.map(col).toIndexedSeq: _*)
+            .cast("decimal(38,0)")))
+        .head()
+      (r.getLong(0), BigDecimal(r.getDecimal(1)))
+    }
+    Tables.all.foreach { t =>
+      val declared = fingerprint(Tables(spark, sfDir, t))
+      val inferred = withNanosAsLong(fingerprint(inferring(sfDir, t)))
+      assert(declared == inferred, s"$t: declared read $declared, inferring read $inferred")
+    }
   }
 }
