@@ -754,15 +754,13 @@ object Compaction {
     * One small-file open per retained generation — driver metadata,
     * never data-sized.
     */
-  private def publishInstant(fs: org.apache.hadoop.fs.FileSystem,
-                             main: Path, n: Long): Long = {
+  private[sources] def publishInstant(fs: org.apache.hadoop.fs.FileSystem,
+                                      main: Path, n: Long): Long = {
     val p = new Path(main, ManifestPrefix + genName(n))
     val fromPayload =
       try {
         val in = fs.open(p)
-        val buf = new Array[Byte](256)
-        val k = try in.read(buf) finally in.close()
-        val text = if (k <= 0) "" else new String(buf, 0, k, "UTF-8")
+        val text = try new String(in.readAllBytes, "UTF-8") finally in.close()
         text.linesIterator
           .find(_.startsWith(PublishedAtKey))
           .flatMap(l => l.stripPrefix(PublishedAtKey).trim.toLongOption)

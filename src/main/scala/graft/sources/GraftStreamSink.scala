@@ -73,10 +73,10 @@ object GraftStreamSink {
     val p = new Path(cur, SinkBatchSidecar)
     try {
       val in = fs.open(p)
-      val buf = new Array[Byte](64)
-      val k = try in.read(buf) finally in.close()
-      if (k <= 0) None
-      else new String(buf, 0, k, "UTF-8").trim.toLongOption
+      // one read() may return fewer bytes than the file holds: a
+      // truncated id would let a redelivered batch apply twice
+      try new String(in.readAllBytes, "UTF-8").trim.toLongOption
+      finally in.close()
     } catch { case _: java.io.IOException => None }
   }
 }
