@@ -434,8 +434,7 @@ object CdcQueries {
             nullDec.as("before"), col("o_totalprice").cast(dec).as("after"))
         Materialize.maintainAggregate(s, path, batch,
           groupKeys = Seq("grp"), before = col("before"),
-          after = col("after"), batchId = Some(m.toLong),
-          generational = true)
+          after = col("after"), batchId = Some(m.toLong))
       }
     }
 

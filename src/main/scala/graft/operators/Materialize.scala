@@ -70,16 +70,15 @@ object Materialize {
     * `after` unused for 'd'). The measure goes through exact DECIMAL
     * arithmetic so the maintained sum is partition-order independent
     * (same discipline as [[graft.util.Det]]).
-    */
-  /** @param prune drop groups whose maintained count is 0 (a group whose
+    *
+    * @param prune drop groups whose maintained count is 0 (a group whose
     *              members were all deleted vanishes, matching a
     *              recompute). Pass `prune = false` when the output is an
     *              INTERMEDIATE per-batch delta that will be merged into a
     *              running aggregate downstream — a single batch's count
     *              delta can legitimately be ≤ 0 (e.g. a delete-only
     *              batch) and must survive to the merge.
-    */
-  /** @param sumAsDouble render `live_sum` as DOUBLE (the query-surface
+    * @param sumAsDouble render `live_sum` as DOUBLE (the query-surface
     *                    default). `false` keeps the exact DECIMAL — what
     *                    a STORED running aggregate must persist, so that
     *                    merging batch after batch never accumulates
@@ -108,10 +107,14 @@ object Materialize {
 
   /** foreachBatch adapter for incremental view maintenance: merge one
     * micro-batch's CDC deltas into the stored grouped aggregate at
-    * `path`. Read current + union the batch delta + re-aggregate +
-    * atomic swap (graft.sources.Compaction's staged/retired discipline —
-    * readers see old or new state, never a mix; an interrupted swap is
-    * completed on the next batch).
+    * `path`. Read the current generation + union the batch delta +
+    * re-aggregate + publish the result as the next generation
+    * (graft.sources.Compaction.writeGen — readers see old or new state,
+    * never a mix, and part-files are never moved under a reader that
+    * is still scanning them). Read it with Compaction.readTable. A
+    * plain parquet dir already at `path` is converted to the
+    * generational layout once (Compaction.toGenerational — run before
+    * concurrent readers start).
     *
     * Scale: per batch the work is one shuffle of (batch deltas + current
     * aggregate) on the group keys — the aggregate table has one row per
@@ -119,131 +122,62 @@ object Materialize {
     * would scan. The stored sum stays exact DECIMAL so thousands of
     * merges accumulate zero float error (spec: batch-wise maintenance ≡
     * one-shot recompute, bit for bit).
-    */
-  /** @param batchId streaming micro-batch id (pass foreachBatch's second
+    *
+    * @param batchId streaming micro-batch id (pass foreachBatch's second
     *                argument). Stored in a `_graft_last_batch` sidecar
-    *                INSIDE the swapped directory — so "state updated" and
-    *                "batch recorded" commit in the same atomic rename —
-    *                and checked on entry: a redelivered batch (crash
-    *                after the swap, before the checkpoint commit) is
-    *                skipped instead of double-applied. Deltas are not
-    *                naturally idempotent the way first-write-wins upserts
-    *                are, so this check is what makes the maintained
-    *                aggregate effectively-once end to end.
-    * @param generational store state in the generational layout
-    *                (Compaction.writeGen/readTable) instead of the flat
-    *                staged/retired swap. The flat swap renames part-files
-    *                out from under an in-flight reader; a maintained
-    *                aggregate is a QUERYABLE view, so deployments where
-    *                consumers scan it while the stream merges must use
-    *                this mode (the marker sidecar rides inside the new
-    *                generation, so effectively-once is unchanged).
-    *                Readers resolve via Compaction.readTable.
+    *                INSIDE the new generation before it is published —
+    *                so "state updated" and "batch recorded" become
+    *                visible together — and checked on entry: a
+    *                redelivered batch (crash after the publish, before
+    *                the checkpoint commit) is skipped instead of
+    *                double-applied. Deltas are not naturally idempotent
+    *                the way first-write-wins upserts are, so this check
+    *                is what makes the maintained aggregate
+    *                effectively-once end to end.
     */
   def maintainAggregate(spark: org.apache.spark.sql.SparkSession,
                         path: String, batch: DataFrame, groupKeys: Seq[String],
                         before: Column, after: Column,
                         opCol: String = "op", scale: Int = 2,
-                        batchId: Option[Long] = None,
-                        generational: Boolean = false): Unit = {
+                        batchId: Option[Long] = None): Unit = {
     import graft.sources.Compaction
     import org.apache.hadoop.fs.Path
     val main = new Path(path)
     val fs = main.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (generational) {
-      // mirror the flat path's recovery discipline FIRST: a flat table
-      // crashed mid-swap (main renamed to retired, staged not yet
-      // promoted — main absent) that is then switched to
-      // generational=true would otherwise look like a fresh table and
-      // silently drop the prior aggregate state. recover() completes
-      // or rolls back the interrupted swap; only a genuinely fresh
-      // table (no main, no completed staged, no retired) skips it.
-      val stagedP0 = Compaction.stagedPath(main)
-      val stagedComplete0 =
-        fs.exists(stagedP0) && fs.exists(new Path(stagedP0, "_SUCCESS"))
-      if (fs.exists(main) || stagedComplete0 ||
-          fs.exists(Compaction.retiredPath(main)))
-        Compaction.recover(fs, main)
-      else if (fs.exists(stagedP0)) fs.delete(stagedP0, true)
-      // a pre-existing flat table is converted once (single-writer
-      // init window, same caveat as toGenerational's scaladoc)
-      if (fs.exists(main) && Compaction.currentGen(fs, main).isEmpty)
-        Compaction.toGenerational(spark, path)
-      val exists = Compaction.currentGen(fs, main).isDefined
-      val curDir = Compaction.resolve(fs, main)
-      val marker = new Path(curDir, "_graft_last_batch")
-      batchId.foreach { id =>
-        if (exists && fs.exists(marker)) {
-          val in = fs.open(marker)
-          val last = try new String(in.readAllBytes()).trim.toLong finally in.close()
-          if (last >= id) return // already applied — skip the redelivery
-        }
-      }
-      val delta = deltaAggregate(batch, groupKeys, before, after, opCol,
-        scale, prune = false, sumAsDouble = false)
-      val dec = org.apache.spark.sql.types.DecimalType(38, scale)
-      val merged =
-        if (!exists) delta.filter(col("live_cnt") > 0)
-        else spark.read.parquet(curDir.toString).unionByName(delta)
-          .groupBy(groupKeys.map(col): _*)
-          .agg(sum(col("live_cnt")).as("live_cnt"),
-            sum(col("live_sum")).cast(dec).as("live_sum"))
-          .filter(col("live_cnt") > 0)
-      // read-snapshot fence: `merged` scans curDir (resolved ABOVE,
-      // before the plan was built) — the fence must name THAT
-      // generation, so a concurrent publisher landing any time after
-      // the resolve fences this publish (FencedWriteException fails
-      // the trigger; the stream replays the batch against the winner's
-      // state) instead of being silently rolled back
-      val readGen =
-        if (exists) Compaction.genNumber(curDir.getName) else None
-      Compaction.writeGen(merged, path, gen =>
-        batchId.foreach { id =>
-          val out = fs.create(new Path(gen, "_graft_last_batch"), true)
-          try out.write(id.toString.getBytes) finally out.close()
-        }, expectGen = readGen)
-      return
-    }
-    // A genuinely fresh table (nothing at main, no completed staged copy,
-    // no retired original) is the first batch, not a recovery case — the
-    // streaming checkpoint will replay it if the initial write crashed; a
-    // partial staged leftover from such a crash is just deleted. Any
-    // OTHER missing-main state goes through Compaction.recover, which
-    // completes or rolls back the interrupted swap (and fails loudly on
-    // the unrecoverable).
-    val stagedP = Compaction.stagedPath(main)
-    val stagedComplete =
-      fs.exists(stagedP) && fs.exists(new Path(stagedP, "_SUCCESS"))
-    if (fs.exists(main) || stagedComplete || fs.exists(Compaction.retiredPath(main)))
-      Compaction.recover(fs, main)
-    else if (fs.exists(stagedP)) fs.delete(stagedP, true)
-    // redelivery guard: the last applied batch id travels inside the
-    // swapped dir, so it can never disagree with the data beside it
-    val marker = new Path(main, "_graft_last_batch")
+    if (fs.exists(main) && Compaction.currentGen(fs, main).isEmpty)
+      Compaction.toGenerational(spark, path)
+    val exists = Compaction.currentGen(fs, main).isDefined
+    val curDir = Compaction.resolve(fs, main)
+    val marker = new Path(curDir, "_graft_last_batch")
     batchId.foreach { id =>
-      if (fs.exists(marker)) {
+      if (exists && fs.exists(marker)) {
         val in = fs.open(marker)
         val last = try new String(in.readAllBytes()).trim.toLong finally in.close()
         if (last >= id) return // already applied — skip the redelivery
       }
     }
-    val delta = deltaAggregate(batch, groupKeys, before, after, opCol, scale,
-      prune = false, sumAsDouble = false)
+    val delta = deltaAggregate(batch, groupKeys, before, after, opCol,
+      scale, prune = false, sumAsDouble = false)
     val dec = org.apache.spark.sql.types.DecimalType(38, scale)
     val merged =
-      if (!fs.exists(main)) delta.filter(col("live_cnt") > 0)
-      else spark.read.parquet(path).unionByName(delta)
+      if (!exists) delta.filter(col("live_cnt") > 0)
+      else spark.read.parquet(curDir.toString).unionByName(delta)
         .groupBy(groupKeys.map(col): _*)
         .agg(sum(col("live_cnt")).as("live_cnt"),
           sum(col("live_sum")).cast(dec).as("live_sum"))
         .filter(col("live_cnt") > 0)
-    // every write lands via staged + swap, so the table transitions
-    // atomically even on the first batch
-    merged.write.mode("overwrite").parquet(stagedP.toString)
-    batchId.foreach { id =>
-      val out = fs.create(new Path(stagedP, "_graft_last_batch"), true)
-      try out.write(id.toString.getBytes) finally out.close()
-    }
-    Compaction.swapIn(fs, main)
+    // read-snapshot fence: `merged` scans curDir (resolved ABOVE,
+    // before the plan was built) — the fence must name THAT
+    // generation, so a concurrent publisher landing any time after
+    // the resolve fences this publish (FencedWriteException fails
+    // the trigger; the stream replays the batch against the winner's
+    // state) instead of being silently rolled back
+    val readGen =
+      if (exists) Compaction.genNumber(curDir.getName) else None
+    Compaction.writeGen(merged, path, gen =>
+      batchId.foreach { id =>
+        val out = fs.create(new Path(gen, "_graft_last_batch"), true)
+        try out.write(id.toString.getBytes) finally out.close()
+      }, expectGen = readGen)
   }
 }

@@ -19,117 +19,48 @@ import org.apache.spark.sql.SparkSession
   * global job, and only directories whose small-file count crosses a
   * threshold are touched.
   *
-  * Crash safety (same swap discipline as the CDC sink's recovery —
-  * streaming/CdcPipeline.recoverBucketLayout): the compacted copy is
-  * staged next to the table, then main→retired, staged→main, retired
-  * deleted. Every crash window is recoverable: staged is incomplete
-  * (no _SUCCESS) → drop it and rerun; main missing with a complete
-  * staged → finish the swap; main missing with only retired → restore
-  * retired. Readers see the old or the new table, never a mix.
+  * Crash safety: every full-table rewrite (compaction, a maintained
+  * aggregate's merge, a forget) writes a NEW generation dir beside the
+  * current one and publishes it by creating one immutable marker file
+  * (see the generational layout below). A writer that crashes before
+  * the marker exists leaves an unpublished dir readers never resolve;
+  * it is pruned once its claim ages out. Readers see the old or the
+  * new generation, never a mix, and files of a published generation
+  * are never moved while a reader may still be scanning them.
   */
 object Compaction {
 
   final case class Stats(filesBefore: Int, filesAfter: Int,
                          bytes: Long, rewritten: Boolean)
 
-  private[graft] def stagedPath(p: Path) = new Path(p.getParent, p.getName + ".__graft_compact_staged")
-  private[graft] def retiredPath(p: Path) = new Path(p.getParent, p.getName + ".__graft_compact_retired")
-
   private def dataFiles(fs: org.apache.hadoop.fs.FileSystem, p: Path) =
     fs.listStatus(p).toSeq
       .filter(s => s.isFile && !s.getPath.getName.startsWith("_")
         && !s.getPath.getName.startsWith("."))
 
-  /** Complete or roll back an interrupted previous compaction so the
-    * table is readable before we (re)compact. Idempotent.
-    */
-  private[graft] def recover(fs: org.apache.hadoop.fs.FileSystem, main: Path): Unit = {
-    val staged = stagedPath(main); val retired = retiredPath(main)
-    val stagedComplete =
-      fs.exists(staged) && fs.exists(new Path(staged, "_SUCCESS"))
-    if (!fs.exists(main)) {
-      if (stagedComplete) {
-        // crashed between the two renames — finish the swap
-        if (!fs.rename(staged, main))
-          sys.error(s"compaction recovery: rename $staged -> $main failed")
-      } else if (fs.exists(retired)) {
-        // staged incomplete but main already retired (rename order
-        // violated only by manual tampering) — restore the original
-        if (!fs.rename(retired, main))
-          sys.error(s"compaction recovery: rename $retired -> $main failed")
-      } else {
-        sys.error(s"compaction: $main missing and no recoverable sibling")
-      }
-    }
-    // main exists: any staged/retired leftovers are stale — drop them
-    if (fs.exists(staged)) fs.delete(staged, true)
-    if (fs.exists(retired)) fs.delete(retired, true)
-  }
-
-  /** Compact the parquet table at `path` into ~`targetBytes` files.
-    * No-op (rewritten=false) when the table is already at or below the
-    * target file count — compaction must be cheap to call repeatedly.
-    */
-  def compactParquet(spark: SparkSession, path: String,
-                     targetBytes: Long = 128L * 1024 * 1024): Stats = {
-    val main = new Path(path)
-    val fs = main.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recover(fs, main)
-    val files = dataFiles(fs, main)
-    val bytes = files.map(_.getLen).sum
-    val nOut = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-    if (files.size <= nOut)
-      return Stats(files.size, files.size, bytes, rewritten = false)
-    spark.read.parquet(path)
-      .repartition(nOut)
-      .write.mode("overwrite").parquet(stagedPath(main).toString)
-    swapIn(fs, main)
-    Stats(files.size, dataFiles(fs, main).size, bytes, rewritten = true)
-  }
-
-  /** Swap a fully-written staged dir in for `main` (main→retired,
-    * staged→main, retired deleted). Callers must have finished writing
-    * the staged dir (with _SUCCESS) first; [[recover]] completes the
-    * swap if a crash lands between the renames.
-    *
-    * NOTE single-writer, no-concurrent-reader discipline: the renames
-    * move the underlying part-files, so a reader that already planned
-    * its scan against `main` loses its files mid-flight (observed as
-    * FAILED_READ_FILE/FileNotFound). Deployments with concurrent
-    * readers must use the GENERATIONAL layout below, whose part-file
-    * paths are immutable until a full compaction cycle has passed.
-    */
-  private[graft] def swapIn(fs: org.apache.hadoop.fs.FileSystem, main: Path): Unit = {
-    val staged = stagedPath(main); val retired = retiredPath(main)
-    if (fs.exists(main) && !fs.rename(main, retired))
-      sys.error(s"compaction: rename $main -> $retired failed")
-    if (!fs.rename(staged, main))
-      sys.error(s"compaction: rename $staged -> $main failed")
-    fs.delete(retired, true)
-  }
-
   // ------------------------------------------------------- generational
 
-  /** Generational table layout — the concurrent-reader-safe variant.
+  /** Generational table layout — the one commit protocol for every
+    * full-table rewrite.
     *
     * {{{
     * table/
-    *   _graft_gen        <- manifest: name of the current generation dir
-    *   g000000041/       <- previous generation (kept one cycle: grace)
-    *   g000000042/       <- current generation (immutable once published)
+    *   _graft_gen.g000000041  <- publish marker of the previous generation
+    *   _graft_gen.g000000042  <- publish marker of the current generation
+    *   g000000041/            <- previous generation (kept one cycle: grace)
+    *   g000000042/            <- current generation (immutable once published)
     * }}}
     *
-    * Readers resolve the manifest then scan `table/<gen>`; writers
-    * write a NEW generation dir, atomically replace the manifest
-    * (FileContext rename with OVERWRITE — atomic on HDFS and posix;
-    * on object stores the manifest PUT is itself atomic), and prune
-    * only generations at least two behind. Because part-files under a
-    * published generation are never renamed or deleted until a full
-    * compaction cycle later, an in-flight reader that planned its scan
-    * any time after the previous publish always finds every file it
-    * listed — no transient-retry window at all, unlike [[swapIn]].
-    * This is the manifest indirection Iceberg/Delta use, reduced to a
-    * single-pointer manifest (one table version, no snapshot history).
+    * Readers take the highest marker ([[currentGen]]) then scan
+    * `table/<gen>`; writers write a NEW generation dir, publish it by
+    * creating its marker (a rename-no-overwrite of a fully written
+    * temp file), and prune only generations at least two behind.
+    * Because part-files under a published generation are never renamed
+    * or deleted until a full compaction cycle later, an in-flight
+    * reader that planned its scan any time after the previous publish
+    * always finds every file it listed — no transient-retry window at
+    * all. This is the manifest indirection Iceberg/Delta use, reduced
+    * to one marker per generation.
     */
   private val ManifestPrefix = "_graft_gen."
   private[sources] val ClaimPrefix = "_graft_claim."
@@ -1122,8 +1053,9 @@ object Compaction {
   }
 
   /** Convert a flat parquet dir into a generational one (run once,
-    * before concurrent readers start — the one-time file moves have the
-    * same reader hazard as [[swapIn]]).
+    * before concurrent readers start: the one-time conversion renames
+    * the flat part files into `g000000001`, so a reader that already
+    * planned a scan of the flat dir loses its files mid-flight).
     */
   def toGenerational(spark: SparkSession, path: String): Unit = {
     val main = new Path(path)
@@ -1220,28 +1152,6 @@ object Compaction {
       rewritten = true)
   }
 
-  /** Write `df` as the next generation of a generational table (the
-    * ingest-side counterpart of [[compactGen]] — any full-table rewrite
-    * goes through the same publish/prune cycle). `beforePublish` runs
-    * against the fully-written but not-yet-visible generation dir —
-    * sidecars written there (e.g. Materialize's redelivery marker)
-    * become visible ATOMICALLY with the data they describe. Sidecars
-    * are NOT carried forward from the previous generation here: the new
-    * df plus whatever `beforePublish` writes IS the new table state,
-    * and a stale marker surviving a state replacement would be wrong
-    * (contrast [[compactGen]], whose rewrite preserves state and so
-    * must preserve the sidecars describing it).
-    *
-    * CONCURRENT WRITERS, FENCED: the target generation is reserved via
-    * [[claimNext]] — two concurrent writeGen calls get DISTINCT dirs,
-    * so the old silent mid-write clobber is structurally impossible —
-    * and the publish rejects non-monotonic generations: if another
-    * writer published first, this writer's df was derived from stale
-    * state and [[FencedWriteException]] fires after its artifacts are
-    * cleaned up. State-merging callers (Materialize.maintainAggregate)
-    * should catch it, re-read the current generation, recompute, and
-    * retry; last-publisher-wins callers may ignore the loser entirely.
-    */
   /** Right-to-be-forgotten on a generational TABLE — the CDC-side twin
     * of [[IndexLifecycle.forgetViaRebuild]]: publish a new generation
     * holding the current rows MINUS what `victim` matches (readers only
@@ -1327,6 +1237,28 @@ object Compaction {
     true
   }
 
+  /** Write `df` as the next generation of a generational table (the
+    * ingest-side counterpart of [[compactGen]] — any full-table rewrite
+    * goes through the same publish/prune cycle). `beforePublish` runs
+    * against the fully-written but not-yet-visible generation dir —
+    * sidecars written there (e.g. Materialize's redelivery marker)
+    * become visible ATOMICALLY with the data they describe. Sidecars
+    * are NOT carried forward from the previous generation here: the new
+    * df plus whatever `beforePublish` writes IS the new table state,
+    * and a stale marker surviving a state replacement would be wrong
+    * (contrast [[compactGen]], whose rewrite preserves state and so
+    * must preserve the sidecars describing it).
+    *
+    * CONCURRENT WRITERS, FENCED: the target generation is reserved via
+    * [[claimNext]] — two concurrent writeGen calls get DISTINCT dirs,
+    * so the old silent mid-write clobber is structurally impossible —
+    * and the publish rejects non-monotonic generations: if another
+    * writer published first, this writer's df was derived from stale
+    * state and [[FencedWriteException]] fires after its artifacts are
+    * cleaned up. State-merging callers (Materialize.maintainAggregate)
+    * should catch it, re-read the current generation, recompute, and
+    * retry; last-publisher-wins callers may ignore the loser entirely.
+    */
   def writeGen(df: org.apache.spark.sql.DataFrame, path: String,
                beforePublish: Path => Unit = _ => (),
                orphanGraceMs: Long = DefaultOrphanGraceMs,

@@ -151,12 +151,6 @@ object FileFormats {
         md5(text) AS digest
         FROM documents WHERE doc_id < 64 ORDER BY doc_id""")),
 
-    // Small-file compaction (sources/Compaction.scala): a 48-task write
-    // leaves 48 KB-sized files — the state every micro-batch sink decays
-    // into — and the compactor bin-packs them back to ceil(bytes/target)
-    // files behind an atomic swap. The oracle checks content fidelity
-    // through the rewrite; file-count and crash-recovery invariants are
-    // spec-asserted (OperatorsSpec).
     // Schema evolution on read: two parquet writes with different column
     // sets under one partitioned root, mergeSchema unioning them with
     // nulls for absent columns — the contract a long-lived ingest dir
@@ -178,13 +172,20 @@ object FileFormats {
         SELECT p_partkey, NULL, p_retailprice, 2 FROM part
         ORDER BY v, p_partkey""")),
 
+    // Small-file compaction (sources/Compaction.scala): a 48-task write
+    // leaves 48 KB-sized files — the state every micro-batch sink decays
+    // into — and the compactor converts the flat dir to the generational
+    // layout, then bin-packs it back to ceil(bytes/target) files in a
+    // newly published generation. The oracle checks content fidelity
+    // through the rewrite; file-count and crash invariants are
+    // spec-asserted (OperatorsSpec).
     GQuery("fmt_compaction",
       (s, d) => {
         val orders = Tables(s, d, "orders")
         val path = tmp("graft_compact")
         orders.repartition(48).write.mode("overwrite").parquet(path)
-        Compaction.compactParquet(s, path)
-        s.read.parquet(path).orderBy(col("o_orderkey"))
+        Compaction.compactGen(s, path)
+        Compaction.readTable(s, path).orderBy(col("o_orderkey"))
       },
       Some("SELECT * FROM orders ORDER BY o_orderkey")),
 

@@ -177,37 +177,27 @@ object CdcPipeline {
   /** [[materialize]] on Spark 4's `transformWithState` — the successor
     * API to flatMapGroupsWithState: typed per-key `ValueState` in the
     * RocksDB state store (incremental checkpoints, state no longer bound
-    * by executor heap — the 100 TB-of-keys path), native TTL support,
-    * and timers decoupled from the data path. Semantics are identical to
-    * [[materialize]] (last-write-wins, tombstones emitted); the optional
-    * `stateTtl` bounds EVERY key's state lifetime (measured from last
-    * update) — the reference's sink keeps rows forever, so NONE is the
-    * faithful default and a real deployment picks its retention.
+    * by executor heap — the 100 TB-of-keys path) and timers decoupled
+    * from the data path. Semantics are identical to [[materialize]]
+    * (last-write-wins, tombstones emitted); state is kept forever, as
+    * the reference's sink keeps its rows.
     */
-  def materializeTws(changes: Dataset[ChangeRec],
-                     stateTtl: TTLConfig = TTLConfig.NONE): Dataset[Upsert] = {
+  def materializeTws(changes: Dataset[ChangeRec]): Dataset[Upsert] = {
     implicit val stringEnc = Encoders.STRING
     implicit val outEnc = Encoders.product[Upsert]
-    // TTL'd state is only legal under ProcessingTime mode (Spark rejects
-    // a non-zero ttl with TimeMode.None at query start), so the time
-    // mode follows the ttl argument.
-    val timeMode =
-      if (stateTtl.ttlDuration == null || stateTtl.ttlDuration.isZero)
-        TimeMode.None()
-      else TimeMode.ProcessingTime()
     changes.groupByKey(_.key)
-      .transformWithState(new LwwProcessor(stateTtl),
-        timeMode, OutputMode.Append())
+      .transformWithState(new LwwProcessor,
+        TimeMode.None(), OutputMode.Append())
   }
 
   /** Last-write-wins keyed processor for [[materializeTws]]. */
-  private class LwwProcessor(stateTtl: TTLConfig)
+  private class LwwProcessor
     extends StatefulProcessor[String, ChangeRec, Upsert] {
     @transient private var state: ValueState[KeyState] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       state = getHandle.getValueState[KeyState](
-        "lww", Encoders.product[KeyState], stateTtl)
+        "lww", Encoders.product[KeyState], TTLConfig.NONE)
 
     override def handleInputRows(key: String, rows: Iterator[ChangeRec],
                                  timerValues: TimerValues): Iterator[Upsert] = {

@@ -880,8 +880,13 @@ class CdcStreamSpec extends AnyFunSuite {
   test("foreachBatch delta-agg maintains a grouped aggregate ≡ one-shot recompute (IVM)") {
     implicit val sqlCtx = spark.sqlContext
     import graft.operators.Materialize
+    import graft.sources.Compaction
     val dir = java.nio.file.Files.createTempDirectory("graft_ivm")
       .toString + "/agg"
+    def state() = Compaction.readTable(spark, dir)
+      .select(col("grp"), col("live_cnt"), col("live_sum").cast("double"))
+      .as[(String, Long, Double)].collect()
+      .map { case (g, c, v) => g -> ((c, v)) }.toMap
     // (grp, op, before, after)
     val input = MemoryStream[(String, String, Option[Double], Option[Double])]
     val q = input.toDF().toDF("grp", "op", "before", "after").writeStream
@@ -896,10 +901,7 @@ class CdcStreamSpec extends AnyFunSuite {
         ("g2", "c", None, Some(5.0)))
       q.processAllAvailable()
       // mid-stream state is already queryable and correct
-      val mid = spark.read.parquet(dir)
-        .select(col("grp"), col("live_cnt"), col("live_sum").cast("double"))
-        .as[(String, Long, Double)].collect()
-        .map { case (g, c, v) => g -> ((c, v)) }.toMap
+      val mid = state()
       assert(mid == Map("g1" -> ((2L, 30.0)), "g2" -> ((1L, 5.0))))
       // batch 2: update g1, delete-only batch for g2 (its count delta is
       // -1 — the prune=false path), then a re-insert in batch 3
@@ -908,55 +910,44 @@ class CdcStreamSpec extends AnyFunSuite {
       q.processAllAvailable()
       input.addData(("g2", "c", None, Some(7.0)))
       q.processAllAvailable()
-      val got = spark.read.parquet(dir)
-        .select(col("grp"), col("live_cnt"), col("live_sum").cast("double"))
-        .as[(String, Long, Double)].collect()
-        .map { case (g, c, v) => g -> ((c, v)) }.toMap
-      assert(got == Map("g1" -> ((2L, 35.0)), "g2" -> ((1L, 7.0))))
+      val got = state()
+      assert(got == Map("g1" -> ((2L, 35.0)), "g2" -> ((1L, 7.0))), s"got $got")
       // stored sum stayed exact DECIMAL across merges
-      val sumType = spark.read.parquet(dir).schema("live_sum").dataType
+      val sumType = Compaction.readTable(spark, dir).schema("live_sum").dataType
       assert(sumType == org.apache.spark.sql.types.DecimalType(38, 2),
         s"stored as $sumType")
-      // redelivery of an already-applied batch id (crash after swap,
+      // redelivery of an already-applied batch id (crash after publish,
       // before checkpoint commit) must be a no-op — deltas are not
       // idempotent, the batch-id sidecar is what makes them so
       val replay = Seq(("g2", "c", None: Option[Double], Some(7.0)))
         .toDF("grp", "op", "before", "after")
       Materialize.maintainAggregate(spark, dir, replay,
         Seq("grp"), col("before"), col("after"), batchId = Some(2L))
-      val after = spark.read.parquet(dir)
-        .select(col("grp"), col("live_cnt"), col("live_sum").cast("double"))
-        .as[(String, Long, Double)].collect()
-        .map { case (g, c, v) => g -> ((c, v)) }.toMap
-      assert(after == got, "redelivered batch was double-applied")
+      assert(state() == got, "redelivered batch was double-applied")
       // a genuinely new batch id still applies
       Materialize.maintainAggregate(spark, dir, replay,
         Seq("grp"), col("before"), col("after"), batchId = Some(3L))
-      val g2 = spark.read.parquet(dir).filter(col("grp") === "g2")
-        .select(col("live_cnt")).as[Long].head()
-      assert(g2 == 2L)
+      assert(state()("g2") == ((2L, 14.0)))
     } finally q.stop()
   }
 
   test("generational IVM: same semantics, marker atomic with its generation, gens pruned") {
-    // The flat swap's reader hazard (part-files renamed away mid-scan)
-    // makes generational = true the mode for a maintained aggregate
-    // that consumers query while the stream merges. Same
-    // effectively-once contract: the batch-id marker is written into
-    // the generation BEFORE publish, so state and bookkeeping appear
-    // atomically; redelivery is a no-op. The zero-transient concurrent-
-    // reader guarantee of the publish path itself is proven in
-    // OperatorsSpec's generational chaos spec.
+    // Every merge publishes one generation (Compaction.writeGen) with
+    // the batch-id marker written into it BEFORE publish, so state and
+    // bookkeeping appear atomically; redelivery is a no-op. The
+    // zero-transient concurrent-reader guarantee of the publish path
+    // itself is proven in OperatorsSpec's generational chaos spec.
     import graft.operators.Materialize
     import graft.sources.Compaction
     val dir = java.nio.file.Files.createTempDirectory("graft_ivm_gen")
       .toString + "/agg"
+    val main = new org.apache.hadoop.fs.Path(dir)
+    val fs = main.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def merge(rows: Seq[(String, String, Option[Double], Option[Double])],
               id: Long) =
       Materialize.maintainAggregate(spark,
         dir, rows.toDF("grp", "op", "before", "after"),
-        Seq("grp"), col("before"), col("after"), batchId = Some(id),
-        generational = true)
+        Seq("grp"), col("before"), col("after"), batchId = Some(id))
     def state() = Compaction.readTable(spark, dir)
       .select(col("grp"), col("live_cnt"), col("live_sum").cast("double"))
       .as[(String, Long, Double)].collect()
@@ -967,6 +958,11 @@ class CdcStreamSpec extends AnyFunSuite {
     merge(Seq(("g2", "c", None, Some(7.0))), 2L)
     val got = state()
     assert(got == Map("g1" -> ((1L, 25.0)), "g2" -> ((1L, 7.0))), s"got $got")
+    // the marker rides inside the published generation
+    val in = fs.open(new org.apache.hadoop.fs.Path(
+      Compaction.resolve(fs, main), "_graft_last_batch"))
+    assert(try new String(in.readAllBytes()).trim.toLong == 2L
+      finally in.close())
     // redelivered batch id → no-op
     merge(Seq(("g2", "c", None, Some(7.0))), 2L)
     assert(state() == got, "redelivered batch was double-applied")
@@ -974,11 +970,64 @@ class CdcStreamSpec extends AnyFunSuite {
     merge(Seq(("g2", "c", None, Some(7.0))), 3L)
     assert(state()("g2") == ((2L, 14.0)))
     // generation dirs stay within the two-generation grace
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val gens = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
+    val gens = fs.listStatus(main)
       .filter(_.isDirectory).map(_.getPath.getName)
     assert(gens.length <= 3, s"prune failed: ${gens.mkString(",")}")
+  }
+
+  test("IVM: crash between a generation's write and its publish applies the batch once") {
+    // A maintain that died after writing its generation (data AND the
+    // batch-id marker) but before publishing it: the redelivered batch
+    // must apply exactly once, over the last PUBLISHED state — the
+    // orphan's marker is never consulted and its rows are never seen.
+    import graft.operators.Materialize
+    import graft.sources.Compaction
+    val dir = java.nio.file.Files.createTempDirectory("graft_ivm_crash")
+      .toString + "/agg"
+    val main = new org.apache.hadoop.fs.Path(dir)
+    val fs = main.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def merge(rows: Seq[(String, String, Option[Double], Option[Double])],
+              id: Long) =
+      Materialize.maintainAggregate(spark,
+        dir, rows.toDF("grp", "op", "before", "after"),
+        Seq("grp"), col("before"), col("after"), batchId = Some(id))
+    def state() = Compaction.readTable(spark, dir)
+      .select(col("grp"), col("live_cnt"), col("live_sum").cast("double"))
+      .as[(String, Long, Double)].collect()
+      .map { case (g, c, v) => g -> ((c, v)) }.toMap
+    merge(Seq(("g1", "c", None, Some(10.0)), ("g2", "c", None, Some(5.0))), 0L)
+    merge(Seq(("g1", "c", None, Some(2.0))), 1L)
+    val published = Compaction.generations(spark, dir)
+    val before = state()
+    assert(before == Map("g1" -> ((2L, 12.0)), "g2" -> ((1L, 5.0))), s"setup: $before")
+    // the crashed writer: claim the next generation, write what batch 2
+    // would have produced plus its marker, never publish
+    val k = 2L
+    val n = Compaction.claimNext(fs, main, "crashed-writer")
+    val orphan = new org.apache.hadoop.fs.Path(main, f"g$n%09d")
+    Seq(("g1", 2L, BigDecimal("12.00")), ("g2", 2L, BigDecimal("8.00")))
+      .toDF("grp", "live_cnt", "live_sum")
+      .select(col("grp"), col("live_cnt"),
+        col("live_sum").cast(org.apache.spark.sql.types.DecimalType(38, 2)))
+      .write.parquet(orphan.toString)
+    val out = fs.create(new org.apache.hadoop.fs.Path(orphan, "_graft_last_batch"))
+    try out.write(k.toString.getBytes) finally out.close()
+    assert(state() == before, "an unpublished generation became visible")
+    assert(Compaction.generations(spark, dir) == published)
+    // redelivery of batch k: applies exactly once, over the published state
+    val batchK = Seq(("g2", "c", None: Option[Double], Some(3.0)))
+    merge(batchK, k)
+    val got = state()
+    assert(got == Map("g1" -> ((2L, 12.0)), "g2" -> ((2L, 8.0))), s"got $got")
+    val gens = Compaction.generations(spark, dir)
+    assert(!gens.contains(n) && gens.max > n,
+      s"orphan g$n resolved by readers: $gens")
+    assert(intercept[IllegalArgumentException](
+      Compaction.readTableAt(spark, dir, n)).getMessage.contains("not readable"))
+    // a second redelivery of k is a no-op: same state, no new generation
+    merge(batchK, k)
+    assert(state() == got, "second redelivery double-applied")
+    assert(Compaction.generations(spark, dir) == gens)
   }
 
   test("generational IVM: compaction preserves the redelivery marker (effectively-once survives compactGen)") {
@@ -995,8 +1044,7 @@ class CdcStreamSpec extends AnyFunSuite {
               id: Long) =
       Materialize.maintainAggregate(spark,
         dir, rows.toDF("grp", "op", "before", "after"),
-        Seq("grp"), col("before"), col("after"), batchId = Some(id),
-        generational = true)
+        Seq("grp"), col("before"), col("after"), batchId = Some(id))
     def state() = Compaction.readTable(spark, dir)
       .select(col("grp"), col("live_cnt"), col("live_sum").cast("double"))
       .as[(String, Long, Double)].collect()
@@ -1031,44 +1079,51 @@ class CdcStreamSpec extends AnyFunSuite {
     assert(state()("g1") == ((3L, 12.0)))
   }
 
-  test("IVM: flat table crashed mid-swap then switched to generational=true recovers, not resets") {
-    // The flat swap's crash window leaves main renamed to retired with
-    // the staged copy not yet promoted. A deployment that then flips
-    // generational=true must RECOVER that state like the flat path
-    // does — before the fix the generational branch saw "no table" and
-    // silently restarted the aggregate from zero.
+  test("IVM: plain parquet aggregate converts on first maintain, state and marker kept") {
+    // A maintained aggregate written before the generational layout
+    // (plain parquet with the `_graft_last_batch` sidecar beside its
+    // part files) is converted once by the first maintain: its state
+    // and its marker move into generation 1 rather than the aggregate
+    // restarting from zero.
     import graft.operators.Materialize
     import graft.sources.Compaction
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivm_switch")
+    val dir = java.nio.file.Files.createTempDirectory("graft_ivm_convert")
       .toString + "/agg"
     val main = new org.apache.hadoop.fs.Path(dir)
     val fs = main.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def merge(rows: Seq[(String, String, Option[Double], Option[Double])],
-              id: Long, gen: Boolean) =
+              id: Long) =
       Materialize.maintainAggregate(spark,
         dir, rows.toDF("grp", "op", "before", "after"),
-        Seq("grp"), col("before"), col("after"), batchId = Some(id),
-        generational = gen)
-    merge(Seq(("g1", "c", None, Some(10.0)), ("g2", "c", None, Some(5.0))),
-      0L, gen = false)
-    merge(Seq(("g1", "c", None, Some(2.0))), 1L, gen = false)
-    // simulate the mid-swap crash: main → retired done, staged promotion
-    // never happened
-    assert(fs.rename(main, Compaction.retiredPath(main)))
-    // switch to generational: prior state must survive the recovery
-    merge(Seq(("g2", "c", None, Some(3.0))), 2L, gen = true)
-    val got = Compaction.readTable(spark, dir)
+        Seq("grp"), col("before"), col("after"), batchId = Some(id))
+    // the state batches 0 and 1 left: g1 = 10 + 2, g2 = 5
+    Seq(("g1", 2L, BigDecimal("12.00")), ("g2", 1L, BigDecimal("5.00")))
+      .toDF("grp", "live_cnt", "live_sum")
+      .select(col("grp"), col("live_cnt"),
+        col("live_sum").cast(org.apache.spark.sql.types.DecimalType(38, 2)))
+      .write.parquet(dir)
+    val out = fs.create(new org.apache.hadoop.fs.Path(main, "_graft_last_batch"))
+    try out.write("1".getBytes) finally out.close()
+    def state() = Compaction.readTable(spark, dir)
       .select(col("grp"), col("live_cnt"), col("live_sum").cast("double"))
       .as[(String, Long, Double)].collect()
       .map { case (g, c, v) => g -> ((c, v)) }.toMap
+    assert(Compaction.generations(spark, dir).isEmpty)
+    // the first maintain is a replay of batch 1: it converts the dir,
+    // and the marker that moved into g1 makes the replay a no-op
+    merge(Seq(("g1", "c", None, Some(99.0))), 1L)
+    assert(Compaction.generations(spark, dir) == Seq(1L))
+    assert(state() == Map("g1" -> ((2L, 12.0)), "g2" -> ((1L, 5.0))),
+      s"plain-parquet state changed on conversion: ${state()}")
+    merge(Seq(("g2", "c", None, Some(3.0))), 2L)
+    val got = state()
     assert(got == Map("g1" -> ((2L, 12.0)), "g2" -> ((2L, 8.0))),
-      s"crashed flat state dropped on generational switch: $got")
-    // the marker moved into g1 with the data: replaying batch 1 is a
-    // no-op even though it predates the conversion
-    merge(Seq(("g1", "c", None, Some(99.0))), 1L, gen = true)
+      s"plain-parquet state dropped on conversion: $got")
+    // replaying the pre-conversion batch id is still a no-op
+    merge(Seq(("g1", "c", None, Some(99.0))), 1L)
     val after = Compaction.readTable(spark, dir)
       .filter(col("grp") === "g1").select(col("live_cnt")).as[Long].head()
-    assert(after == 2L, "pre-conversion batch id replayed after switch")
+    assert(after == 2L, "pre-conversion batch id replayed after conversion")
   }
 
   test("streaming incremental dedup: probe-then-append loop, cross-batch, replay-idempotent") {
