@@ -16,18 +16,28 @@ import graft.model.Schemas
   */
 object Envelope {
 
-  /** Parse JSON envelope records. Malformed rows yield a null struct and
-    * are dropped — the streaming equivalent of the reference consumer's
-    * log-and-skip on message error (transaction_consumer.py:77-81).
+  /** Parse JSON envelope records into `before`, `after`, `op`, `ts_ms`
+    * and `source` (the fields of `Schemas.envelope(payload)`).
+    *
+    * A record `from_json` cannot parse yields a null envelope, and one
+    * with no `op` a null `op`; both are dropped — the streaming
+    * equivalent of the reference consumer's log-and-skip on message
+    * error (transaction_consumer.py:77-81). A null envelope comes out of
+    * the generator as a row of nulls, so `op IS NOT NULL` alone drops
+    * both kinds.
+    *
+    * The parse runs inside a generator (`inline` over a one-element
+    * array) and the validity filter sits above it, so `from_json` runs
+    * once per record: Catalyst never pushes a predicate on a
+    * generator's output below the generator. Over a plain projection it
+    * would push the filter down and inline the parse into it, parsing
+    * each record once more per null check.
     */
   def parse(raw: DataFrame, payload: StructType = Schemas.transactionPrecise,
             jsonCol: String = "value"): DataFrame =
     raw
-      .withColumn("__env", from_json(col(jsonCol).cast("string"), Schemas.envelope(payload)))
-      .filter(col("__env").isNotNull && col("__env.op").isNotNull)
-      .select(col("__env.before").as("before"), col("__env.after").as("after"),
-        col("__env.op").as("op"), col("__env.ts_ms").as("ts_ms"),
-        col("__env.source").as("source"))
+      .select(inline(array(from_json(col(jsonCol).cast("string"), Schemas.envelope(payload)))))
+      .filter(col("op").isNotNull)
 
   /** The row image an op refers to: `before` for deletes, else `after`
     * (REPLICA IDENTITY FULL ⇒ before is present on u/d, README.md:173).

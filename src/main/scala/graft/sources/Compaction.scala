@@ -708,6 +708,11 @@ object Compaction {
     */
   def readTableAt(spark: SparkSession, path: String,
                   gen: Long): org.apache.spark.sql.DataFrame = {
+    requireReadable(spark, path, gen)
+    graft.util.FooterSchema.read(spark, new Path(path, genName(gen)).toString)
+  }
+
+  private def requireReadable(spark: SparkSession, path: String, gen: Long): Unit = {
     val main = new Path(path)
     val fs = main.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // a pruned generation loses marker AND dir on the same grace, so
@@ -718,7 +723,6 @@ object Compaction {
       s"generation $gen at $path is not readable — never published, " +
         "in flight, or outside the retention window (readable: " +
         s"${generations(spark, path).mkString(",")})")
-    graft.util.FooterSchema.read(spark, new Path(main, genName(gen)).toString)
   }
 
   /** The change feed BETWEEN two published generations — the inverse
@@ -1334,14 +1338,19 @@ object Compaction {
           orphanGraceMs = orphanGraceMs, readerGraceMs = readerGraceMs)
       case Some(cur) =>
         val curDir = new Path(main, genName(cur))
-        val curDf = readTableAt(spark, path, cur)
-        val want = curDf.schema.fields
+        // the footer answers the schema check without building a
+        // DataFrame (no DataSource resolution or file-index listing)
+        requireReadable(spark, path, cur)
+        lazy val curDf = readTableAt(spark, path, cur)
+        val curSchema = graft.util.FooterSchema.of(spark, Seq(curDir.toString))
+          .getOrElse(curDf.schema)
+        val want = curSchema.fields
           .map(f => f.name -> f.dataType.sql).toMap
         val got = df.schema.fields
           .map(f => f.name -> f.dataType.sql).toMap
         require(want == got,
           s"appendGen: schema mismatch at $path — table has " +
-            s"${curDf.schema.simpleString}, append has " +
+            s"${curSchema.simpleString}, append has " +
             s"${df.schema.simpleString}")
         if (fs.listStatus(curDir).exists(s => s.isDirectory &&
             !s.getPath.getName.startsWith("."))) {

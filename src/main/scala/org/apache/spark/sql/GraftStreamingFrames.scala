@@ -22,16 +22,6 @@ object GraftStreamingFrames {
       cdf.queryExecution.toRdd, schema, isStreaming = true)
   }
 
-  /** A streaming-tagged frame that fails with `msg` only when
-    * EXECUTED. MicroBatchExecution re-requests the last COMMITTED
-    * batch at every restart purely to restore V1-source state and
-    * discards the result — that replay may name generations that have
-    * since aged out of retention, and an eager error there would brick
-    * every restart whose history was pruned (observed; spec-pinned).
-    * A real redelivery of an UNCOMMITTED batch does execute its frame
-    * and hits the loud error. Delta's streaming source defers its
-    * vacuumed-version errors the same way.
-    */
   /** The inverse direction, for the streaming SINK: the frame a V1
     * `Sink.addBatch` receives is bound to the engine's
     * IncrementalExecution and refuses `.write` ("write cannot be
@@ -46,6 +36,16 @@ object GraftStreamingFrames {
       cdf.queryExecution.toRdd, cdf.schema, isStreaming = false)
   }
 
+  /** A streaming-tagged frame that fails with `msg` only when
+    * EXECUTED. MicroBatchExecution re-requests the last COMMITTED
+    * batch at every restart purely to restore V1-source state and
+    * discards the result — that replay may name generations that have
+    * since aged out of retention, and an eager error there would brick
+    * every restart whose history was pruned (observed; spec-pinned).
+    * A real redelivery of an UNCOMMITTED batch does execute its frame
+    * and hits the loud error. Delta's streaming source defers its
+    * vacuumed-version errors the same way.
+    */
   def deferredError(session: SparkSession, schema: StructType,
                     msg: String): DataFrame = {
     val cs = session.asInstanceOf[classic.SparkSession]

@@ -362,6 +362,9 @@ class ValidateSpec extends AnyFunSuite {
         i.toDouble, s"free_$i")
     }.toDF("id", "c1", "c2", "c3", "c4", "num", "wide").cache()
     df.count() // materialize outside the counted window
+    // the execution-listener bus is async: deliver this count()'s (and
+    // earlier tests') events before the listener can see them
+    org.apache.spark.GraftCpuMeter.drain(spark.sparkContext)
     val actions = new java.util.concurrent.atomic.AtomicInteger(0)
     val l = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(funcName: String,
@@ -374,15 +377,8 @@ class ValidateSpec extends AnyFunSuite {
     spark.listenerManager.register(l)
     try {
       suggest(df, Seq("id", "c1", "c2", "c3", "c4", "num", "wide"))
-      // the execution-listener bus is async — poll until stable
-      var last = -1
-      var stable = 0
-      var tries = 0
-      while (stable < 3 && tries < 50) {
-        val now = actions.get()
-        if (now == last) stable += 1 else { stable = 0; last = now }
-        Thread.sleep(100); tries += 1
-      }
+      org.apache.spark.GraftCpuMeter.drain(spark.sparkContext)
+      val last = actions.get()
       assert(last >= 1 && last <= 2,
         s"suggest must cost at most 2 actions (stats pass + one " +
           s"shared values job), ran $last")
