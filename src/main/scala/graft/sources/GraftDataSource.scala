@@ -217,10 +217,10 @@ class GraftDataSource extends TableProvider with DataSourceRegister
         "generation is one snapshot directory")
     require(outputMode != org.apache.spark.sql.streaming.OutputMode.Update(),
       "graft streaming sink: Update mode needs keyed upsert semantics — " +
-        "use CdcPipeline.idempotentParquetUpsert / materialize in " +
-        "foreachBatch (they know the key); Append publishes each batch " +
-        "as a new generation, Complete publishes it as the replacement " +
-        "snapshot")
+        "use CdcPipeline.idempotentParquetUpsert in foreachBatch, or " +
+        "CdcPipeline.materializeTws upstream (they know the key); " +
+        "Append publishes each batch as a new generation, Complete " +
+        "publishes it as the replacement snapshot")
     new GraftStreamSink(sqlContext.sparkSession, path, outputMode)
   }
 

@@ -33,8 +33,8 @@ import org.apache.spark.sql.streaming.OutputMode
   * O(#files) metadata for the carry — the sink never rewrites history
   * in Append mode. Partition columns are rejected (generations are
   * snapshot dirs); Update mode is rejected — keyed upsert semantics
-  * live in `CdcPipeline.idempotentParquetUpsert`/`materialize`, which
-  * know the key.
+  * live in `CdcPipeline.idempotentParquetUpsert`/`materializeTws`,
+  * which know the key.
   */
 final class GraftStreamSink(spark: SparkSession, path: String,
                             mode: OutputMode) extends Sink {

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
 import graft.operators.Materialize
 
@@ -19,7 +19,7 @@ import graft.operators.Materialize
   *    (transaction_consumer.py:85-103) → dropDuplicates* on the key, or
   *    first-write-wins in `foreachBatch`;
   *  - CDC apply of the Debezium envelope → stateful last-write-wins with
-  *    deletes (flatMapGroupsWithState).
+  *    deletes (`materializeTws`, on transformWithState).
   */
 object CdcPipeline {
 
@@ -75,123 +75,57 @@ object CdcPipeline {
   /** Emitted on state change; op "d" is a tombstone for the sink. */
   case class Upsert(key: String, tsMs: Long, op: String, json: String)
 
-  /** Last-write-wins per key, honoring deletes — emits a record whenever
-    * a key's current image changes. State is one row per live key
-    * (same asymptotics as the reference's sink table).
+  /** Event-time tombstone eviction for [[materializeTws]]: a key whose
+    * latest op is a delete keeps its state until the watermark (event
+    * time `tsMs` minus `watermarkDelay`) passes delete time + `ttlMs`.
     */
-  def materialize(changes: Dataset[ChangeRec]): Dataset[Upsert] = {
-    implicit val stringEnc = Encoders.STRING
-    implicit val stateEnc = Encoders.product[KeyState]
-    implicit val outEnc = Encoders.product[Upsert]
-    changes.groupByKey(_.key)
-      .flatMapGroupsWithState[KeyState, Upsert](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: String, it: Iterator[ChangeRec], state: GroupState[KeyState]) =>
-          def geq(aTs: Long, aSeq: Long, bTs: Long, bSeq: Long): Boolean =
-            aTs > bTs || (aTs == bTs && aSeq >= bSeq)
-          val newest = it.reduceOption { (a, b) =>
-            if (geq(a.tsMs, a.seq, b.tsMs, b.seq)) a else b
-          }
-          newest match {
-            case Some(rec) =>
-              val cur = state.getOption
-              val wins = cur.forall(c => geq(rec.tsMs, rec.seq, c.tsMs, c.seq))
-              if (wins) {
-                state.update(KeyState(rec.tsMs, rec.seq, rec.op, rec.json))
-                Iterator.single(Upsert(key, rec.tsMs, rec.op, rec.json))
-              } else Iterator.empty
-            case None => Iterator.empty
-          }
-      }
-  }
+  case class TombstoneTtl(watermarkDelay: String, ttlMs: Long)
 
-  /** [[ChangeRec]] plus the event-time column the watermark rides on. */
-  case class ChangeRecT(key: String, tsMs: Long, seq: Long, op: String,
-                        json: String, eventTime: java.sql.Timestamp)
-
-  /** [[materialize]] with tombstone eviction: identical last-write-wins
-    * semantics, but a key whose latest op is a delete keeps its state only
-    * until `watermark ≥ delete time + tombstoneTtl` — then the state row
-    * is dropped. Without this, a delete-heavy 100 TB stream's state grows
-    * with every key ever deleted (the reference's sink table also never
-    * shrinks, but its deletes are rows in Postgres, not executor memory).
+  /** Last-write-wins per key, honoring deletes, on Spark 4's
+    * `transformWithState`: typed per-key `ValueState` in the RocksDB
+    * state store (the session must use `RocksDBStateStoreProvider`;
+    * incremental checkpoints, state not bound by executor heap). A
+    * change replaces the key's state, and is emitted, only when its
+    * `(tsMs, seq)` is strictly newer than the state's, so an identical
+    * redelivery in a later batch emits nothing. Within a batch the same
+    * comparator picks the key's newest change.
     *
-    * The tombstone must outlive the duplicate-delivery window (the
-    * watermark delay): while it lives, a late replayed insert with an
-    * older ts_ms still loses to it; after eviction such a replay is
-    * impossible because the watermark already passed it. A genuinely NEW
-    * insert for the key (ts_ms past the delete) wins whether or not the
-    * tombstone is still resident.
+    * With no `tombstoneTtl`, state is one row per key ever seen, kept
+    * forever as the reference's sink keeps its rows; the plan has no
+    * time mode and no timers.
     *
-    * GroupState timeouts are cleared on every invocation for the group,
-    * so a live upsert after a delete automatically cancels the pending
-    * eviction; only ops that leave a tombstone re-arm it.
+    * With a `tombstoneTtl`, a delete that wins registers an event-time
+    * timer at `max(deleteTs + ttlMs, watermark + 1)`, a newer change
+    * that replaces the tombstone deletes it, and an expired timer drops
+    * the state row. Without this, a delete-heavy stream's state grows
+    * with every key ever deleted. The tombstone must outlive the
+    * duplicate-delivery window (the watermark delay): while it lives, a
+    * replayed insert with an older ts_ms still loses to it. In this
+    * event-time mode Spark drops input rows already behind the
+    * watermark, so a replay older than an evicted tombstone cannot
+    * re-create the key. A genuinely new insert (ts_ms past the delete)
+    * wins whether or not the tombstone is still resident.
     */
-  def materializeWithTtl(changes: Dataset[ChangeRec], watermarkDelay: String,
-                         tombstoneTtlMs: Long): Dataset[Upsert] = {
-    implicit val stringEnc = Encoders.STRING
-    implicit val stateEnc = Encoders.product[KeyState]
-    implicit val outEnc = Encoders.product[Upsert]
-    implicit val inEnc = Encoders.product[ChangeRecT]
-    val ttlMs = tombstoneTtlMs
-    val withTime = changes
-      .withColumn("eventTime", timestamp_millis(col("tsMs")))
-      .withWatermark("eventTime", watermarkDelay)
-      .as[ChangeRecT]
-    withTime.groupByKey(_.key)
-      .flatMapGroupsWithState[KeyState, Upsert](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: String, it: Iterator[ChangeRecT], state: GroupState[KeyState]) =>
-          if (state.hasTimedOut) {
-            // watermark passed deleteTs + ttl: no on-time event can
-            // precede the tombstone anymore — drop the state row
-            state.remove()
-            Iterator.empty
-          } else {
-            def geq(aTs: Long, aSeq: Long, bTs: Long, bSeq: Long): Boolean =
-              aTs > bTs || (aTs == bTs && aSeq >= bSeq)
-            val newest = it.reduceOption { (a, b) =>
-              if (geq(a.tsMs, a.seq, b.tsMs, b.seq)) a else b
-            }
-            val out = newest match {
-              case Some(rec) =>
-                val cur = state.getOption
-                val wins = cur.forall(c => geq(rec.tsMs, rec.seq, c.tsMs, c.seq))
-                if (wins) {
-                  state.update(KeyState(rec.tsMs, rec.seq, rec.op, rec.json))
-                  Iterator.single(Upsert(key, rec.tsMs, rec.op, rec.json))
-                } else Iterator.empty
-              case None => Iterator.empty
-            }
-            state.getOption.foreach { s =>
-              if (s.op == "d")
-                state.setTimeoutTimestamp(
-                  math.max(s.tsMs + ttlMs,
-                    state.getCurrentWatermarkMs() + 1))
-            }
-            out
-          }
-      }
-  }
-
-  /** [[materialize]] on Spark 4's `transformWithState` — the successor
-    * API to flatMapGroupsWithState: typed per-key `ValueState` in the
-    * RocksDB state store (incremental checkpoints, state no longer bound
-    * by executor heap — the 100 TB-of-keys path) and timers decoupled
-    * from the data path. Semantics are identical to [[materialize]]
-    * (last-write-wins, tombstones emitted); state is kept forever, as
-    * the reference's sink keeps its rows.
-    */
-  def materializeTws(changes: Dataset[ChangeRec]): Dataset[Upsert] = {
+  def materializeTws(changes: Dataset[ChangeRec],
+                     tombstoneTtl: Option[TombstoneTtl] = None): Dataset[Upsert] = {
     implicit val stringEnc = Encoders.STRING
     implicit val outEnc = Encoders.product[Upsert]
-    changes.groupByKey(_.key)
-      .transformWithState(new LwwProcessor,
-        TimeMode.None(), OutputMode.Append())
+    val timed = tombstoneTtl.fold(changes) { t =>
+      changes.withColumn("eventTime", timestamp_millis(col("tsMs")))
+        .withWatermark("eventTime", t.watermarkDelay)
+        .as[ChangeRec](Encoders.product[ChangeRec])
+    }
+    timed.groupByKey(_.key)
+      .transformWithState(new LwwProcessor(tombstoneTtl.map(_.ttlMs)),
+        if (tombstoneTtl.isEmpty) TimeMode.None() else TimeMode.EventTime(),
+        OutputMode.Append())
   }
 
-  /** Last-write-wins keyed processor for [[materializeTws]]. */
-  private class LwwProcessor
+  /** Last-write-wins keyed processor for [[materializeTws]]. Timer calls
+    * are made only with a TTL, and only for a key whose state is or
+    * becomes a tombstone.
+    */
+  private class LwwProcessor(tombstoneTtlMs: Option[Long])
     extends StatefulProcessor[String, ChangeRec, Upsert] {
     @transient private var state: ValueState[KeyState] = _
 
@@ -199,28 +133,42 @@ object CdcPipeline {
       state = getHandle.getValueState[KeyState](
         "lww", Encoders.product[KeyState], TTLConfig.NONE)
 
+    private def newer(aTs: Long, aSeq: Long, bTs: Long, bSeq: Long): Boolean =
+      aTs > bTs || (aTs == bTs && aSeq > bSeq)
+
     override def handleInputRows(key: String, rows: Iterator[ChangeRec],
                                  timerValues: TimerValues): Iterator[Upsert] = {
-      def geq(aTs: Long, aSeq: Long, bTs: Long, bSeq: Long): Boolean =
-        aTs > bTs || (aTs == bTs && aSeq >= bSeq)
-      val newest = rows.reduceOption { (a, b) =>
-        if (geq(a.tsMs, a.seq, b.tsMs, b.seq)) a else b
+      val rec = rows.reduce((a, b) => if (newer(b.tsMs, b.seq, a.tsMs, a.seq)) b else a)
+      val cur = if (state.exists()) Some(state.get()) else None
+      if (cur.exists(c => !newer(rec.tsMs, rec.seq, c.tsMs, c.seq))) Iterator.empty
+      else {
+        tombstoneTtlMs.foreach { ttl =>
+          if (cur.exists(_.op == "d")) getHandle.listTimers().foreach(getHandle.deleteTimer)
+          if (rec.op == "d")
+            getHandle.registerTimer(
+              math.max(rec.tsMs + ttl, timerValues.getCurrentWatermarkInMs() + 1))
+        }
+        state.update(KeyState(rec.tsMs, rec.seq, rec.op, rec.json))
+        Iterator.single(Upsert(key, rec.tsMs, rec.op, rec.json))
       }
-      newest match {
-        case Some(rec) =>
-          val cur = if (state.exists()) Option(state.get()) else None
-          val wins = cur.forall(c => geq(rec.tsMs, rec.seq, c.tsMs, c.seq))
-          if (wins) {
-            state.update(KeyState(rec.tsMs, rec.seq, rec.op, rec.json))
-            Iterator.single(Upsert(key, rec.tsMs, rec.op, rec.json))
-          } else Iterator.empty
-        case None => Iterator.empty
-      }
+    }
+
+    // the watermark passed deleteTs + ttl: no on-time change can precede
+    // the tombstone anymore
+    override def handleExpiredTimer(key: String, timerValues: TimerValues,
+                                    expiredTimerInfo: ExpiredTimerInfo): Iterator[Upsert] = {
+      state.clear()
+      Iterator.empty
     }
   }
 
   /** Adapt an op-tagged flat DataFrame (Envelope.toRows output) to
-    * ChangeRec for [[materialize]].
+    * ChangeRec for [[materializeTws]]. A row whose key, `ts_ms` or
+    * sequence is null is dropped: `from_json` reads a field it could not
+    * convert (say `"ts_ms":"16"`) as null, such a change can be neither
+    * keyed nor ordered, and as a ChangeRec it would fail the whole job
+    * and stop the stream. This is the reference consumer's skip of a bad
+    * message (transaction_consumer.py:77-81).
     */
   def toChangeRecs(rows: DataFrame, keyCol: String, seqCol: String): Dataset[ChangeRec] = {
     implicit val enc = Encoders.product[ChangeRec]
@@ -230,6 +178,7 @@ object CdcPipeline {
       col(seqCol).cast("long").as("seq"),
       col("op").cast("string").as("op"),
       to_json(struct(rows.columns.filterNot(Set("op", "ts_ms")).map(col).toSeq: _*)).as("json"))
+      .filter(col("key").isNotNull && col("tsMs").isNotNull && col("seq").isNotNull)
       .as[ChangeRec]
   }
 

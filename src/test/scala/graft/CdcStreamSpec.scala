@@ -15,7 +15,7 @@ import graft.streaming.CdcPipeline.ChangeRec
   * MemoryStream exactly like the Kafka source would feed it.
   */
 class CdcStreamSpec extends AnyFunSuite {
-  import GraftSpark.spark
+  import GraftSpark.{rocksDbProvider, spark, withConf}
   import spark.implicits._
 
   private def env(op: String, id: String, amountB64: String, scale: Int,
@@ -33,46 +33,57 @@ class CdcStreamSpec extends AnyFunSuite {
     java.math.BigInteger.valueOf(12345).toByteArray)
 
   test("envelope stream materializes to last-write-wins state with deletes") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[String]
-    val raw = input.toDF().withColumnRenamed("value", "value")
+    withConf(rocksDbProvider) {
+      implicit val sqlCtx = spark.sqlContext
+      val input = MemoryStream[String]
+      val raw = input.toDF().withColumnRenamed("value", "value")
 
-    val parsed = Envelope.parse(raw, CdcStreamSpecSchemas.payload)
-    val rows = parsed
-      .withColumn("__row", Envelope.currentImage)
-      .select(col("op"), col("ts_ms"),
-        col("__row.transaction_id").as("transaction_id"),
-        graft.functions.DebeziumDecimal.fromMode("precise", col("__row.amount"), 2)
-          .cast("string").as("amount"))
-    val changes = CdcPipeline.toChangeRecs(rows, "transaction_id", "ts_ms")
-    val out = CdcPipeline.materialize(changes)
+      val parsed = Envelope.parse(raw, CdcStreamSpecSchemas.payload)
+      val rows = parsed
+        .withColumn("__row", Envelope.currentImage)
+        .select(col("op"), col("ts_ms"),
+          col("__row.transaction_id").as("transaction_id"),
+          graft.functions.DebeziumDecimal.fromMode("precise", col("__row.amount"), 2)
+            .cast("string").as("amount"))
+      val changes = CdcPipeline.toChangeRecs(rows, "transaction_id", "ts_ms")
+      val out = CdcPipeline.materializeTws(changes)
 
-    val q = out.writeStream.format("memory").queryName("cdc_state")
-      .outputMode("append").start()
-    try {
-      // batch 1: two inserts, one duplicate delivery (at-least-once)
-      input.addData(
-        env("c", "t1", b500, 2, 1000),
-        env("c", "t1", b500, 2, 1000), // duplicate
-        env("c", "t2", b12345, 2, 1001))
-      q.processAllAvailable()
-      // batch 2: update t1, delete t2, garbage line (consumer skips, O12)
-      input.addData(
-        env("u", "t1", b12345, 2, 2000, before = true),
-        env("d", "t2", b12345, 2, 2001),
-        "{not json")
-      q.processAllAvailable()
+      val q = out.writeStream.format("memory").queryName("cdc_state")
+        .outputMode("append").start()
+      try {
+        // batch 1: two inserts, one duplicate delivery (at-least-once)
+        input.addData(
+          env("c", "t1", b500, 2, 1000),
+          env("c", "t1", b500, 2, 1000), // duplicate
+          env("c", "t2", b12345, 2, 1001))
+        q.processAllAvailable()
+        // batch 2: update t1, delete t2, garbage line (consumer skips, O12)
+        input.addData(
+          env("u", "t1", b12345, 2, 2000, before = true),
+          env("d", "t2", b12345, 2, 2001),
+          "{not json")
+        q.processAllAvailable()
+        // batch 3: a ts_ms from_json cannot convert and a null key are
+        // skipped; the stream keeps running and applies the valid row
+        input.addData(
+          env("c", "t3", b500, 2, 0).replace("\"ts_ms\":0", "\"ts_ms\":\"16\""),
+          env("c", "t5", b500, 2, 3000).replace("\"t5\"", "null"),
+          env("c", "t4", b500, 2, 3001))
+        q.processAllAvailable()
+        assert(q.isActive && q.exception.isEmpty, s"${q.exception}")
 
-      val state = spark.table("cdc_state")
-        .groupBy("key")
-        .agg(max_by(struct(col("op"), col("json")), col("tsMs")).as("s"))
-        .select(col("key"), col("s.op").as("op"), col("s.json").as("json"))
-        .collect().map(r => r.getString(0) -> (r.getString(1), r.getString(2))).toMap
+        val state = spark.table("cdc_state")
+          .groupBy("key")
+          .agg(max_by(struct(col("op"), col("json")), col("tsMs")).as("s"))
+          .select(col("key"), col("s.op").as("op"), col("s.json").as("json"))
+          .collect().map(r => r.getString(0) -> (r.getString(1), r.getString(2))).toMap
 
-      assert(state("t1")._1 == "u")
-      assert(state("t1")._2.contains("123.45"))
-      assert(state("t2")._1 == "d") // tombstone emitted
-    } finally q.stop()
+        assert(state("t1")._1 == "u")
+        assert(state("t1")._2.contains("123.45"))
+        assert(state("t2")._1 == "d") // tombstone emitted
+        assert(state.keySet == Set("t1", "t2", "t4"), state.keySet)
+      } finally q.stop()
+    }
   }
 
   test("streaming foreachBatch into the bucket-pruned parquet sink (O14 e2e)") {
@@ -97,14 +108,11 @@ class CdcStreamSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("transformWithState materialization matches flatMapGroupsWithState LWW") {
+  test("materializeTws keeps the newest change per key, with tombstones") {
     // Spark 4's transformWithState requires the RocksDB state store —
     // which is also the point: per-key state off the executor heap
     implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf(rocksDbProvider) {
       val input = MemoryStream[(String, Long, Long, String, String)]
       val changes = input.toDF().toDF("key", "tsMs", "seq", "op", "json")
         .as[ChangeRec]
@@ -128,10 +136,14 @@ class CdcStreamSpec extends AnyFunSuite {
         assert(last("t1") == ("u", "{a:2}"))
         assert(last("t2") == ("d", "{}")) // tombstone emitted
         assert(!spark.table("tws_state").collect().exists(_.getString(3) == "{stale}"))
+        // the same two changes redelivered in a later batch are not newer
+        // than the state: no output row, no state write
+        val emitted = spark.table("tws_state").count()
+        input.addData(("t1", 2000L, 3L, "u", "{a:2}"), ("t2", 2001L, 4L, "d", "{}"))
+        q.processAllAvailable()
+        assert(spark.table("tws_state").count() == emitted)
+        assert(q.lastProgress.stateOperators.map(_.numRowsUpdated).sum == 0L)
       } finally q.stop()
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
@@ -140,11 +152,7 @@ class CdcStreamSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val root = java.nio.file.Files.createTempDirectory("graft_changelog").toString
     val sink = s"$root/sink"; val ckpt = s"$root/ckpt"
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
     val changelogKey = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    val prev = Seq(providerKey, changelogKey).map(k => k -> spark.conf.getOption(k))
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val input = MemoryStream[(String, Long, Long, String, String)]
     val fed = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long, String, String)]
     def feed(from: Int): Unit = {
@@ -155,8 +163,7 @@ class CdcStreamSpec extends AnyFunSuite {
       fed ++= batch
       input.addData(batch)
     }
-    def run(changelog: Boolean): Seq[Long] = {
-      spark.conf.set(changelogKey, changelog.toString)
+    def run(changelog: Boolean): Seq[Long] = withConf(changelogKey -> changelog.toString) {
       val q = CdcPipeline.materializeTws(
           input.toDF().toDF("key", "tsMs", "seq", "op", "json").as[ChangeRec])
         .writeStream.format("graft")
@@ -187,7 +194,7 @@ class CdcStreamSpec extends AnyFunSuite {
       val state = java.nio.file.Paths.get(s"$ckpt/state")
       java.nio.file.Files.walk(state).filter(_.toString.endsWith(".changelog")).count()
     }
-    try {
+    withConf(rocksDbProvider) {
       feed(0); run(changelog = false); check()
       assert(changelogFiles() == 0L)
       feed(20); val second = run(changelog = true); check()
@@ -203,50 +210,49 @@ class CdcStreamSpec extends AnyFunSuite {
       assert(third.contains(last) && third.max == last + 1, third)
       assert(Compaction.generations(spark, sink).max == gensBefore + 1,
         "only the new batch publishes a generation")
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 
-  test("materializeWithTtl evicts tombstoned keys once past the watermark") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(String, Long, Long, String, String)]
-    val changes = input.toDF().toDF("key", "tsMs", "seq", "op", "json")
-      .as[ChangeRec]
-    // 1 min watermark delay, 1 min tombstone ttl → eviction at delete+2min
-    val out = CdcPipeline.materializeWithTtl(changes,
-      watermarkDelay = "1 minute", tombstoneTtlMs = 60000L)
-    val q = out.writeStream.format("memory").queryName("ttl_state")
-      .outputMode("append").start()
-    def stateRows(): Long = {
-      val p = q.lastProgress
-      if (p == null) -1 else p.stateOperators.map(_.numRowsTotal).sum
+  test("materializeTws evicts tombstoned keys once past the watermark") {
+    withConf(rocksDbProvider) {
+      implicit val sqlCtx = spark.sqlContext
+      val input = MemoryStream[(String, Long, Long, String, String)]
+      val changes = input.toDF().toDF("key", "tsMs", "seq", "op", "json")
+        .as[ChangeRec]
+      // 1 min watermark delay, 1 min tombstone ttl → eviction at delete+2min
+      val out = CdcPipeline.materializeTws(changes,
+        Some(CdcPipeline.TombstoneTtl(watermarkDelay = "1 minute", ttlMs = 60000L)))
+      val q = out.writeStream.format("memory").queryName("ttl_state")
+        .outputMode("append").start()
+      def stateRows(): Long = {
+        val p = q.lastProgress
+        if (p == null) -1 else p.stateOperators.map(_.numRowsTotal).sum
+      }
+      try {
+        val t0 = 1700000000000L
+        input.addData(("k1", t0, 1L, "c", "{v:1}"), ("k2", t0, 2L, "c", "{v:2}"))
+        q.processAllAvailable()
+        input.addData(("k1", t0 + 1000, 3L, "d", "{}"))
+        q.processAllAvailable()
+        assert(stateRows() == 2, s"live + tombstone expected, got ${stateRows()}")
+        // advance event time far past delete + watermark + ttl; the extra
+        // batch lets the new watermark trigger the timeout pass
+        input.addData(("k9", t0 + 600000, 4L, "c", "{v:9}"))
+        q.processAllAvailable()
+        input.addData(("k9", t0 + 601000, 5L, "u", "{v:10}"))
+        q.processAllAvailable()
+        assert(stateRows() == 2, s"tombstone should be evicted, got ${stateRows()}")
+        // a NEW insert for the evicted key must win and re-create state
+        input.addData(("k1", t0 + 700000, 6L, "c", "{v:back}"))
+        q.processAllAvailable()
+        val last = spark.table("ttl_state")
+          .groupBy("key").agg(max_by(struct(col("op"), col("json")), col("tsMs")).as("s"))
+          .select(col("key"), col("s.op"), col("s.json"))
+          .collect().map(r => r.getString(0) -> (r.getString(1), r.getString(2))).toMap
+        assert(last("k1") == ("c", "{v:back}"))
+        assert(stateRows() == 3, s"k1 re-created, got ${stateRows()}")
+      } finally q.stop()
     }
-    try {
-      val t0 = 1700000000000L
-      input.addData(("k1", t0, 1L, "c", "{v:1}"), ("k2", t0, 2L, "c", "{v:2}"))
-      q.processAllAvailable()
-      input.addData(("k1", t0 + 1000, 3L, "d", "{}"))
-      q.processAllAvailable()
-      assert(stateRows() == 2, s"live + tombstone expected, got ${stateRows()}")
-      // advance event time far past delete + watermark + ttl; the extra
-      // batch lets the new watermark trigger the timeout pass
-      input.addData(("k9", t0 + 600000, 4L, "c", "{v:9}"))
-      q.processAllAvailable()
-      input.addData(("k9", t0 + 601000, 5L, "u", "{v:10}"))
-      q.processAllAvailable()
-      assert(stateRows() == 2, s"tombstone should be evicted, got ${stateRows()}")
-      // a NEW insert for the evicted key must win and re-create state
-      input.addData(("k1", t0 + 700000, 6L, "c", "{v:back}"))
-      q.processAllAvailable()
-      val last = spark.table("ttl_state")
-        .groupBy("key").agg(max_by(struct(col("op"), col("json")), col("tsMs")).as("s"))
-        .select(col("key"), col("s.op"), col("s.json"))
-        .collect().map(r => r.getString(0) -> (r.getString(1), r.getString(2))).toMap
-      assert(last("k1") == ("c", "{v:back}"))
-      assert(stateRows() == 3, s"k1 re-created, got ${stateRows()}")
-    } finally q.stop()
   }
 
   test("stream-static broadcast enrichment join (dimension lookup on a stream)") {
@@ -435,34 +441,36 @@ class CdcStreamSpec extends AnyFunSuite {
   }
 
   test("pipeline throughput far exceeds the reference's 2 msg/s ceiling") {
-    // The reference paces itself to ≤2 msg/s (sleep(0.5) per message,
-    // transaction_producer.py:51) and commits per message. Push 10k
-    // envelopes through parse → decode → stateful materialize and check
-    // the engine clears it orders of magnitude faster.
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[String]
-    val parsed = Envelope.parse(input.toDF(), CdcStreamSpecSchemas.payload)
-    val rows = parsed.withColumn("__row", Envelope.currentImage)
-      .select(col("op"), col("ts_ms"),
-        col("__row.transaction_id").as("transaction_id"),
-        graft.functions.DebeziumDecimal.fromMode("precise", col("__row.amount"), 2)
-          .cast("string").as("amount"))
-    val out = CdcPipeline.materialize(
-      CdcPipeline.toChangeRecs(rows, "transaction_id", "ts_ms"))
-    val q = out.writeStream.format("memory").queryName("tp_out")
-      .outputMode("append").start()
-    try {
-      val n = 10000
-      input.addData((0 until n).map(i => env("c", s"t$i", b500, 2, 1000L + i)))
-      val t0 = System.nanoTime()
-      q.processAllAvailable()
-      val secs = (System.nanoTime() - t0) / 1e9
-      val got = spark.table("tp_out").count()
-      assert(got == n)
-      val rate = n / secs
-      info(f"$rate%.0f msg/s through parse+decode+materialize")
-      assert(rate > 200, f"rate=$rate%.0f msg/s — reference ceiling is 2")
-    } finally q.stop()
+    withConf(rocksDbProvider) {
+      // The reference paces itself to ≤2 msg/s (sleep(0.5) per message,
+      // transaction_producer.py:51) and commits per message. Push 10k
+      // envelopes through parse → decode → stateful materialize and check
+      // the engine clears it orders of magnitude faster.
+      implicit val sqlCtx = spark.sqlContext
+      val input = MemoryStream[String]
+      val parsed = Envelope.parse(input.toDF(), CdcStreamSpecSchemas.payload)
+      val rows = parsed.withColumn("__row", Envelope.currentImage)
+        .select(col("op"), col("ts_ms"),
+          col("__row.transaction_id").as("transaction_id"),
+          graft.functions.DebeziumDecimal.fromMode("precise", col("__row.amount"), 2)
+            .cast("string").as("amount"))
+      val out = CdcPipeline.materializeTws(
+        CdcPipeline.toChangeRecs(rows, "transaction_id", "ts_ms"))
+      val q = out.writeStream.format("memory").queryName("tp_out")
+        .outputMode("append").start()
+      try {
+        val n = 10000
+        input.addData((0 until n).map(i => env("c", s"t$i", b500, 2, 1000L + i)))
+        val t0 = System.nanoTime()
+        q.processAllAvailable()
+        val secs = (System.nanoTime() - t0) / 1e9
+        val got = spark.table("tp_out").count()
+        assert(got == n)
+        val rate = n / secs
+        info(f"$rate%.0f msg/s through parse+decode+materialize")
+        assert(rate > 200, f"rate=$rate%.0f msg/s — reference ceiling is 2")
+      } finally q.stop()
+    }
   }
 
   test("stream-stream interval join with watermarks (§2B range/interval)") {

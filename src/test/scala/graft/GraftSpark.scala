@@ -20,4 +20,22 @@ object GraftSpark {
     s
   }
   val sfDir = "/root/testdata/sf0.001"
+
+  /** The state store `transformWithState` needs. */
+  val rocksDbProvider: (String, String) =
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** Runs `body` with the given session confs set, then restores each
+    * key's previous value (or unsets it).
+    */
+  def withConf[T](kv: (String, String)*)(body: => T): T = {
+    val prev = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }

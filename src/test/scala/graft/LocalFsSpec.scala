@@ -148,10 +148,7 @@ class LocalFsSpec extends AnyFunSuite {
     val root = tmp("graft_localfs_forks").toString
     val tbl = s"$root/gen"
     Compaction.appendGen(spark.range(10).toDF("id"), tbl)
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val cmds = try processesStartedBy {
+    val cmds = GraftSpark.withConf(GraftSpark.rocksDbProvider)(processesStartedBy {
       spark.range(100).toDF("id").write.parquet(s"$root/pq")
       Compaction.appendGen(spark.range(10, 20).toDF("id"), tbl)
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -173,10 +170,7 @@ class LocalFsSpec extends AnyFunSuite {
         input.addData(("b", 4L, 4L, "d", "{}"))
         q2.processAllAvailable()
       } finally q2.stop()
-    } finally prevProvider match {
-      case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
+    })
     assert(Compaction.generations(spark, s"$root/sink").max == 3L)
     // Spark's JavaUtils.deleteRecursively still runs `rm -rf` on local
     // temp dirs (the RocksDB working copies); that fork is Spark's own
