@@ -236,7 +236,7 @@ class CdcStreamSpec extends AnyFunSuite {
         q.processAllAvailable()
         assert(stateRows() == 2, s"live + tombstone expected, got ${stateRows()}")
         // advance event time far past delete + watermark + ttl; the extra
-        // batch lets the new watermark trigger the timeout pass
+        // batch runs under the new watermark, which fires the eviction timer
         input.addData(("k9", t0 + 600000, 4L, "c", "{v:9}"))
         q.processAllAvailable()
         input.addData(("k9", t0 + 601000, 5L, "u", "{v:10}"))
